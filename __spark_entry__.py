@@ -2475,19 +2475,16 @@ FROM raw ORDER BY doc_id
 def _q_seq_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus trigram count table (operators/ngrams.py) — the LM
     count-table / contamination-index build stage.  Grams materialize
-    map-side (12-byte CSV keys cross the shuffle, never token arrays);
-    counts partial-combine so hot grams can't skew the reduce;
-    min-count prunes the Zipf tail post-aggregate; top-200 output is
-    TakeOrdered-bounded with a deterministic (count DESC, gram ASC)
-    tie-break.  Gram keys are 16-bit-PACKED int64s from the Arrow
-    kernel (guide §2.3: 8-byte integer shuffle keys instead of ~12-byte
-    CSV strings; §4.2: vectorized explosion instead of an interpreted
-    slice+join lambda per gram) — the CSV rendering applies to the
-    200-row result only."""
+    map-side as 16-bit-PACKED int64 keys (guide §2.3: 8-byte integer
+    shuffle keys, never token arrays); counts partial-combine so hot
+    grams can't skew the reduce; min-count prunes the Zipf tail
+    post-aggregate; top-200 output is TakeOrdered-bounded with a
+    deterministic (count DESC, gram ASC) tie-break.  The CSV rendering
+    applies to the 200-row result only."""
     grams = datagen.exploded_packed_grams(
         SKN.spine_scalars(spark, sf_dir), 3
     )
-    return NG.ngram_stats_packed(grams, 3, min_count=2, top_k=200)
+    return NG.ngram_stats(grams, 3, min_count=2, top_k=200)
 
 
 _SQL_SEQ_NGRAM_STATS = (
@@ -2512,10 +2509,10 @@ def _q_seq_ngram_continuations(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank window partitions by prefix (distributed; WindowGroupLimit
     bounds the sort); probabilities round to 6 places on both engines;
     output bounded at any SF by a deterministic (prefix_total DESC,
-    prefix, rank) TakeOrdered cut.  Packed-prefix Arrow kernel feeds the
-    same window stack (see seq_ngram_stats)."""
+    prefix, rank) TakeOrdered cut.  Packed prefix keys cross the
+    exchange (see seq_ngram_stats)."""
     pairs = datagen.exploded_packed_prefix(SKN.spine_scalars(spark, sf_dir), 3)
-    return NG.ngram_continuations_packed(
+    return NG.ngram_continuations(
         pairs, 3, k=3, min_prefix_count=8, limit_rows=1500
     )
 
@@ -2554,10 +2551,10 @@ def _q_seq_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     then score) joined on narrow (prefix, next) keys; vocab size is a
     driver-side literal; ppl = exp(round(xent,4)) so both engines
     exponentiate the identical double."""
-    # Packed-prefix Arrow kernel feeds the same join/aggregate stack
-    # (see seq_ngram_stats); the vocab count comes from the kernel's
-    # in-task distinct (vocab-bounded rows per batch) instead of a
-    # corpus-sized one-token explode.
+    # Packed prefix keys (see seq_ngram_stats) keyed by the canon number
+    # c; doc_id == 'doc'||c reconstructs post-aggregate.  The vocab
+    # count comes from the kernel's in-task distinct (vocab-bounded rows
+    # per batch) instead of a corpus-sized one-token explode.
     pairs = datagen.exploded_packed_prefix(SKN.spine_scalars(spark, sf_dir), 3)
     vocab = (
         SKN.spine_scalars(spark, sf_dir).select("_c", "n_tok")
@@ -2565,7 +2562,16 @@ def _q_seq_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .count()
     )
-    return NG.lm_score_packed(pairs, alpha=0.5, vocab_size=vocab).orderBy("doc_id")
+    return (
+        NG.lm_score(pairs, alpha=0.5, vocab_size=vocab)
+        .select(
+            F.concat(F.lit("doc"), F.col("c").cast("string")).alias("doc_id"),
+            "n_grams",
+            "xent",
+            "ppl",
+        )
+        .orderBy("doc_id")
+    )
 
 
 _SQL_SEQ_LM_SCORE = (
@@ -5823,7 +5829,7 @@ def _q_seq_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln() rounds to 6 dp on both engines over an identical IEEE op
     sequence; top-k cuts on the ROUNDED pmi with (tok_a, tok_b)
     tie-break."""
-    # packed bigram + in-task unigram partial-combine (see seq_ngram_stats)
+    # packed bigram keys + in-task unigram partial-combine
     spine = SKN.spine_scalars(spark, sf_dir)
     bigrams = datagen.exploded_packed_grams(spine, 2)
     uni = (
@@ -5839,7 +5845,7 @@ def _q_seq_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     t_bi = float(totals["t"]) if totals["t"] else 1.0
     u_uni = float(totals["u"]) if totals["u"] else 1.0
-    return NG.collocation_pmi_packed(bigrams, uni, t_bi, u_uni, min_count=2, top_k=100)
+    return NG.collocation_pmi(bigrams, uni, t_bi, u_uni, min_count=2, top_k=100)
 
 
 _SQL_SEQ_COLLOCATIONS = (
@@ -6883,9 +6889,8 @@ def _q_seq_nucleus_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     allpairs_prefix), crossing token included.  Same narrow
     (prefix, next) exchange as the continuation table; windows are
     prefix-partitioned; TakeOrdered bounds output at any SF."""
-    # packed-prefix Arrow kernel, same window stack (see seq_ngram_stats)
     pairs = datagen.exploded_packed_prefix(SKN.spine_scalars(spark, sf_dir), 3)
-    return NG.nucleus_sets_packed(
+    return NG.nucleus_sets(
         pairs, 3, p_num=9, p_den=10, min_prefix_count=8, limit_rows=1500
     )
 

@@ -607,6 +607,9 @@ def exploded_gram_positions(
 def exploded_packed_grams(spine: DataFrame, n: int) -> DataFrame:
     """(c, g): one row per n-gram occurrence with the 16-bit-packed gram
     key (seqkernel.packed_gram_kernel's pairing), as scalar codegen."""
+    from .functions.seqkernel import check_packed_width
+
+    check_packed_width(n)
     c = F.col("c")
     pos = F.col("pos")
     g = F.lit(0).cast("long")
@@ -627,6 +630,9 @@ def exploded_packed_grams(spine: DataFrame, n: int) -> DataFrame:
 def exploded_packed_prefix(spine: DataFrame, n: int) -> DataFrame:
     """(c, p, next_tok): one row per n-gram occurrence — packed
     (n-1)-token prefix plus the following token, as scalar codegen."""
+    from .functions.seqkernel import check_packed_width
+
+    check_packed_width(n - 1)
     c = F.col("c")
     pos = F.col("pos")
     p = F.lit(0).cast("long")

@@ -49,20 +49,14 @@ M31 = 2**31          # checksum modulus
 
 def _segment_reduce(ufunc, flat: np.ndarray, starts: np.ndarray,
                     lengths: np.ndarray, empty: int) -> np.ndarray:
-    """Per-segment ``ufunc.reduceat`` that tolerates empty segments and a
-    trailing empty tail (plain ``reduceat`` mis-handles both: an index
-    equal to the next one returns ``flat[idx]`` and an index == len(flat)
-    raises).  Segments with length 0 yield ``empty``."""
-    n_rows = len(starts)
-    out = np.full(n_rows, empty, dtype=np.int64)
-    if flat.size == 0 or n_rows == 0:
-        return out
+    """Per-segment ``ufunc.reduceat`` over segments that tile ``flat``
+    in order.  Only NON-EMPTY segments' starts feed ``reduceat`` (an
+    index equal to the next one would return ``flat[idx]``, and an index
+    == len(flat) raises); empty segments yield ``empty``."""
+    out = np.full(len(starts), empty, dtype=np.int64)
     nz = lengths > 0
-    if not nz.any():
-        return out
-    idx = np.minimum(starts, flat.size - 1)
-    red = ufunc.reduceat(flat, idx)
-    out[nz] = red[nz]
+    if nz.any():
+        out[nz] = ufunc.reduceat(flat, starts[nz])
     return out
 
 
@@ -451,51 +445,64 @@ def distinct_grams_kernel(n: int = 8, base: int = 313, mod: int = P31,
 assert VOCAB_SIZE < (1 << 16)
 
 
-def packed_gram_kernel(n: int, from_gen: bool = True):
-    """mapInArrow kernel: spine scalars -> (c, g) one row per n-gram
-    occurrence, ``g`` the 16-bit-packed gram key.  Docs shorter than
-    ``n`` emit nothing (explode_ngrams convention).  ``c`` is the canon
-    doc number (doc_id == 'doc'+c, so COUNT(DISTINCT c) ==
-    COUNT(DISTINCT doc_id) and doc_id reconstructs post-aggregate)."""
+def check_packed_width(n_tokens: int) -> None:
+    """Packed keys hold ``n_tokens`` 16-bit tokens in a SIGNED int64:
+    VOCAB_SIZE > 2^15, so a 4-token key can set the sign bit (and the
+    CSV unpacking would read it back wrong).  Raise instead."""
+    if not 16 * n_tokens < 64:
+        raise ValueError(
+            f"a packed key holds at most 3 tokens of 16 bits, got {n_tokens}"
+        )
+
+
+def _packed_windows(batch: pa.RecordBatch, n: int, key_col: str, m: int):
+    """Shared map stage of the packed kernels over a real ``tokens``
+    column: (key per window, packed first-``m``-token key, flat index of
+    each window's start).  Docs shorter than ``n`` (and empty / NULL
+    rows) have no windows."""
+    flat, rid, pos, starts, lengths, _nulls = _list_column(batch, "tokens")
+    if flat.size and (flat.min() < 0 or flat.max() >= (1 << 16)):
+        raise ValueError("token ids must lie in [0, 2^16) to pack")
+    win_idx = np.flatnonzero(pos <= (lengths[rid] - n))
+    key = batch.column(key_col).take(pa.array(rid[win_idx], type=pa.int64()))
+    packed = np.zeros(len(win_idx), dtype=np.int64)
+    for k in range(m):
+        packed = (packed << 16) | flat[win_idx + k]
+    return key, packed, flat, win_idx
+
+
+def packed_gram_kernel(n: int, key_col: str):
+    """mapInArrow kernel: (``key_col``, tokens) -> (``key_col``, g) one
+    row per n-gram occurrence, ``g`` the 16-bit-packed gram key and
+    ``key_col`` passed through (doc id, canon number, ...).  Generator
+    input has its codegen builder, ``datagen.exploded_packed_grams``."""
+    check_packed_width(n)
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
-            c = batch.column("_c").to_numpy(zero_copy_only=False).astype(np.int64)
-            win_idx = np.flatnonzero(pos <= (lengths[rid] - n))
-            g = np.zeros(len(win_idx), dtype=np.int64)
-            for k in range(n):
-                g = (g << 16) | flat[win_idx + k]
+            key, g, _flat, _win = _packed_windows(batch, n, key_col, n)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(c[rid[win_idx]], type=pa.int64()),
-                 pa.array(g, type=pa.int64())],
-                names=["c", "g"],
+                [key, pa.array(g, type=pa.int64())], names=[key_col, "g"]
             )
 
     return fn
 
 
-def packed_prefix_kernel(n: int, from_gen: bool = True):
-    """mapInArrow kernel: spine scalars -> (c, p, next_tok) one row per
-    n-gram occurrence: ``p`` the packed (n-1)-token prefix, ``next_tok``
-    the following token — the conditional-LM pair stage (lm_score /
-    continuations / nucleus) with an 8-byte prefix key instead of CSV."""
-    m = n - 1
+def packed_prefix_kernel(n: int, key_col: str):
+    """mapInArrow kernel: (``key_col``, tokens) -> (``key_col``, p,
+    next_tok) one row per n-gram occurrence: ``p`` the packed
+    (n-1)-token prefix, ``next_tok`` the following token — the
+    conditional-LM pair stage (lm_score / continuations / nucleus).
+    Generator input: ``datagen.exploded_packed_prefix``."""
+    check_packed_width(n - 1)
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
-            c = batch.column("_c").to_numpy(zero_copy_only=False).astype(np.int64)
-            win_idx = np.flatnonzero(pos <= (lengths[rid] - n))
-            p = np.zeros(len(win_idx), dtype=np.int64)
-            for k in range(m):
-                p = (p << 16) | flat[win_idx + k]
-            nx = flat[win_idx + m].astype(np.int32)
+            key, p, flat, win_idx = _packed_windows(batch, n, key_col, n - 1)
+            nx = flat[win_idx + n - 1].astype(np.int32)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(c[rid[win_idx]], type=pa.int64()),
-                 pa.array(p, type=pa.int64()),
-                 pa.array(nx, type=pa.int32())],
-                names=["c", "p", "next_tok"],
+                [key, pa.array(p, type=pa.int64()), pa.array(nx, type=pa.int32())],
+                names=[key_col, "p", "next_tok"],
             )
 
     return fn
@@ -507,6 +514,7 @@ def packed_to_csv(col, n: int):
     on result-sized frames only."""
     from pyspark.sql import functions as F
 
+    check_packed_width(n)
     col = F.col(col) if isinstance(col, str) else col
     parts = [
         (F.shiftright(col, 16 * (n - 1 - k)) % (1 << 16)).cast("int").cast("string")

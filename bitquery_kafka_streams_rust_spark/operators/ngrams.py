@@ -8,23 +8,36 @@ tail with a min-count cutoff.  The reference engine keeps per-key
 counters in consumer memory (``src/processors/dex_processor.rs``
 counter maps) — this is the distributed, unbounded-keyspace analog.
 
+Input frames are the packed map stage, one row per n-gram occurrence:
+
+- ``(key, g)`` — ``g`` the gram packed into one int64 (16 bits per
+  token); ``key`` names the document (doc id, canon number, ...);
+- ``(key, p, next_tok)`` — the packed (n-1)-token prefix and the token
+  that follows it.
+
+``seqkernel.packed_gram_kernel`` / ``packed_prefix_kernel`` build them
+from a real ``tokens`` column (batch or stream); ``datagen.
+exploded_packed_grams`` / ``exploded_packed_prefix`` from the
+deterministic generator.  Docs shorter than ``n`` contribute nothing.
+
 Plan shape (the part that must survive 100 TB):
 
-- Grams are materialized MAP-SIDE from the token array (Catalyst
-  ``transform(sequence(...)) -> explode``); only the ~12-byte gram key
-  (CSV of ``n`` token ids) and the doc id cross the shuffle — never the
-  token array itself (repo invariant).
-- ``groupBy(gram)`` counts are sum-decomposable, so hash-aggregate
+- Grams are materialized MAP-SIDE; only the 8-byte packed key and the
+  doc key cross the shuffle — never the token array itself (repo
+  invariant).  The CSV rendering of a gram (part of the declared
+  output) is applied AFTER aggregation/limits, on result-sized frames.
+- ``groupBy(g)`` counts are sum-decomposable, so hash-aggregate
   partial combine collapses each partition to one row per gram before
   the exchange: a "the"-style hot gram contributes ONE partial per
   partition, not 10^9 shuffle rows — reducer skew is structurally
   impossible for the count.  Document frequency rides the standard
-  two-phase distinct rewrite on (gram, doc_id), same property.
+  two-phase distinct rewrite on (g, key), same property.
 - The min-count cutoff runs POST-aggregate (HAVING) and is what keeps
   the output table bounded in practice: Zipf tails mean most grams are
   singletons, and they die here without ever being collected.
 - ``top_k`` output runs through TakeOrderedAndProject (bounded
-  per-partition heaps), never a global sort.
+  per-partition heaps), never a global sort; tie-breaks defined on the
+  CSV string use the string (computed post-aggregate, pre-limit).
 
 Continuations (``ngram_continuations``) build the conditional
 next-token table p(next | prefix): per-prefix totals and ranks via a
@@ -35,193 +48,62 @@ prefixes never reach the window.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _gram_csv(tokens: Column, start: Column, n: int) -> Column:
-    """CSV rendering of ``tokens[start .. start+n)`` (1-based slice) —
-    the shuffle key.  CSV (not the int array) so downstream group keys
-    are flat binary comparable and the oracle comparator can sort."""
-    return F.array_join(
-        F.transform(F.slice(tokens, start, n), lambda t: t.cast("string")), ","
-    )
+from ..functions.seqkernel import packed_to_csv
 
 
-def explode_ngrams(
-    seq: DataFrame,
-    n: int = 3,
-    *,
-    token_col: str = "tokens",
-    n_tok_col: str = "n_tok",
-    doc_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, gram) — one row per n-gram occurrence, computed
-    map-side.  Sequences shorter than ``n`` contribute nothing.
-
-    ``sequence(0, n_tok - n)`` would DESCEND for short docs (Spark
-    infers step -1 when start > stop) — the ``when`` guard keeps the
-    degenerate case an empty array instead.
-    """
-    starts = F.when(
-        F.col(n_tok_col) >= n,
-        F.sequence(F.lit(0), F.col(n_tok_col) - n),
-    ).otherwise(F.array().cast("array<int>"))
-    return seq.select(
-        F.col(doc_col).alias("doc_id"),
-        F.explode(
-            F.transform(starts, lambda i: _gram_csv(F.col(token_col), i + 1, n))
-        ).alias("gram"),
-    )
+def _key_col(frame: DataFrame, packed: tuple[str, ...]) -> str:
+    """The one document-key column of a packed occurrence frame."""
+    (key,) = [c for c in frame.columns if c not in packed]
+    return key
 
 
 def ngram_stats(
-    seq: DataFrame,
-    n: int = 3,
+    grams: DataFrame,
+    n: int,
     *,
     min_count: int = 2,
     top_k: int | None = 200,
-    token_col: str = "tokens",
-    n_tok_col: str = "n_tok",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
-    """Corpus n-gram count table: (gram, n_occur, n_doc).
+    """Corpus n-gram count table (gram, n_occur, n_doc) over a packed
+    (key, g) occurrence frame.
 
     ``n_occur`` is total occurrences, ``n_doc`` the document frequency
-    (docs are counted by id: bit-identical duplicate rows sharing an id
-    count once in ``n_doc``, each occurrence still counts in
+    (docs are counted by key: bit-identical duplicate rows sharing an
+    id count once in ``n_doc``, each occurrence still counts in
     ``n_occur`` — compose after dedup for clean-corpus counts).
     ``top_k`` orders by (n_occur DESC, gram ASC) — fully deterministic
     under count ties.
     """
-    grams = explode_ngrams(
-        seq, n, token_col=token_col, n_tok_col=n_tok_col, doc_col=doc_col
-    )
     stats = (
-        grams.groupBy("gram")
+        grams.groupBy("g")
         .agg(
             F.count("*").alias("n_occur"),
-            F.countDistinct("doc_id").alias("n_doc"),
+            F.countDistinct(_key_col(grams, ("g",))).alias("n_doc"),
         )
         .where(F.col("n_occur") >= min_count)
+        .select(packed_to_csv("g", n).alias("gram"), "n_occur", "n_doc")
     )
     if top_k is not None:
         stats = stats.orderBy(F.desc("n_occur"), F.asc("gram")).limit(top_k)
     return stats
 
 
-def lm_score(
-    seq: DataFrame,
-    n: int = 3,
-    *,
-    alpha: float = 0.5,
-    vocab_size: int | None = None,
-    token_col: str = "tokens",
-    n_tok_col: str = "n_tok",
-    doc_col: str = "doc_id",
-    reliable: bool = False,
-) -> DataFrame:
-    """Per-document n-gram LM cross-entropy / perplexity under the
-    corpus's own add-α-smoothed model — the CCNet/Gopher perplexity
-    quality filter: docs whose token stream the corpus LM finds
-    surprising (boilerplate, noise, wrong-register text) score high
-    and get cut at a ppl threshold downstream.
-
-    ``P(w|prefix) = (c(prefix,w) + α) / (c(prefix) + α·V)``;
-    ``xent = avg(-ln P)`` over the doc's n-grams, ``ppl = exp(xent)``.
-    Docs shorter than ``n`` tokens have no grams and emit no row.
-
-    Scale shape — KenLM's estimate+query collapsed to ONE corpus walk:
-    the per-(doc, gram) count table ``docgram`` is built map-side (CSV
-    gram keys cross the shuffle map-combined, never token arrays) and
-    materialized once (`dedup._materialize`, the KenLM intermediate);
-    the corpus gram table is a re-aggregation of it, the prefix table a
-    re-aggregation of that (both aggregate-sized), and scoring equi-
-    joins ``docgram`` back against the scored gram table on (prefix,
-    next) — narrow keys, partial-combinable final per-doc fold.  ``V``
-    (vocab size) is collected driver-side and inlined as a literal
-    (metadata scale; avoids the scalar-subquery
-    BroadcastNestedLoopJoin) — pass ``vocab_size`` to pin it.
-
-    Cross-engine float parity: ``xent`` rounds to 4 places and ``ppl``
-    is exp() OF THE ROUNDED xent (then rounded to 3) so both engines
-    exponentiate the identical double instead of racing associativity
-    across a much finer rounding grid.
-    """
-    m = n - 1
-    starts = F.when(
-        F.col(n_tok_col) >= n,
-        F.sequence(F.lit(0), F.col(n_tok_col) - n),
-    ).otherwise(F.array().cast("array<int>"))
-    occ = seq.select(
-        F.col(doc_col).alias("doc_id"),
-        F.explode(
-            F.transform(
-                starts,
-                lambda i: F.struct(
-                    _gram_csv(F.col(token_col), i + 1, m).alias("prefix"),
-                    F.element_at(F.col(token_col), (i + n).cast("int")).alias(
-                        "next_tok"
-                    ),
-                ),
-            )
-        ).alias("pn"),
-    ).select("doc_id", "pn.prefix", "pn.next_tok")
-    from bitquery_kafka_streams_rust_spark.operators.dedup import _materialize
-
-    # docgram is corpus-sized (≈ total token positions): reliable=True
-    # swaps localCheckpoint for the lineage-keeping DISK_ONLY persist on
-    # preemptible capacity, same contract as the dedup/span/graph
-    # families (a lost executor recomputes instead of killing the job)
-    docgram = _materialize(
-        occ.groupBy("doc_id", "prefix", "next_tok").agg(F.count("*").alias("k")),
-        reliable,
-    )
-    if vocab_size is None:
-        vocab_size = (
-            seq.select(F.explode(token_col).alias("t")).distinct().count()
-        )
-    cnt = docgram.groupBy("prefix", "next_tok").agg(F.sum("k").alias("c_gram"))
-    pre = cnt.groupBy("prefix").agg(F.sum("c_gram").alias("c_prefix"))
-    lp = cnt.join(pre, "prefix").select(
-        "prefix",
-        "next_tok",
-        F.log(
-            (F.col("c_gram") + F.lit(float(alpha)))
-            / (F.col("c_prefix") + F.lit(float(alpha) * vocab_size))
-        ).alias("logp"),
-    )
-    return (
-        docgram.join(lp, ["prefix", "next_tok"])
-        .groupBy("doc_id")
-        .agg(
-            F.sum("k").alias("n_grams"),
-            (F.sum(F.col("k") * -F.col("logp")) / F.sum("k")).alias("_x"),
-        )
-        .select(
-            "doc_id",
-            "n_grams",
-            F.round("_x", 4).alias("xent"),
-            F.round(F.exp(F.round("_x", 4)), 3).alias("ppl"),
-        )
-    )
-
-
 def ngram_continuations(
-    seq: DataFrame,
-    n: int = 3,
+    pairs: DataFrame,
+    n: int,
     *,
     k: int = 3,
     min_prefix_count: int = 8,
     limit_rows: int | None = None,
-    token_col: str = "tokens",
-    n_tok_col: str = "n_tok",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
-    """Conditional next-token table: for each (n-1)-gram prefix with at
-    least ``min_prefix_count`` occurrences, the top-``k`` continuations
-    by count with their empirical probability.
+    """Conditional next-token table over a packed (key, p, next_tok)
+    frame: for each (n-1)-gram prefix with at least
+    ``min_prefix_count`` occurrences, the top-``k`` continuations by
+    count with their empirical probability.
 
     Output: (prefix, prefix_total, next_tok, n_occur, prob, rank);
     ``prob`` is rounded to 6 places (cross-engine float parity), ties
@@ -232,262 +114,6 @@ def ngram_continuations(
     TakeOrdered limit — the hottest prefixes survive at any SF instead
     of the output growing with the corpus.
     """
-    m = n - 1
-    starts = F.when(
-        F.col(n_tok_col) >= n,
-        F.sequence(F.lit(0), F.col(n_tok_col) - n),
-    ).otherwise(F.array().cast("array<int>"))
-    pairs = seq.select(
-        F.explode(
-            F.transform(
-                starts,
-                lambda i: F.struct(
-                    _gram_csv(F.col(token_col), i + 1, m).alias("prefix"),
-                    F.element_at(F.col(token_col), (i + n).cast("int")).alias(
-                        "next_tok"
-                    ),
-                ),
-            )
-        ).alias("pn")
-    ).select("pn.prefix", "pn.next_tok")
-    counts = pairs.groupBy("prefix", "next_tok").agg(F.count("*").alias("n_occur"))
-    w = Window.partitionBy("prefix")
-    wrank = w.orderBy(F.desc("n_occur"), F.asc("next_tok"))
-    out = (
-        counts.withColumn("prefix_total", F.sum("n_occur").over(w))
-        .where(F.col("prefix_total") >= min_prefix_count)
-        .withColumn("rank", F.row_number().over(wrank))
-        .where(F.col("rank") <= k)
-        .select(
-            "prefix",
-            "prefix_total",
-            "next_tok",
-            "n_occur",
-            F.round(F.col("n_occur") / F.col("prefix_total"), 6).alias("prob"),
-            "rank",
-        )
-    )
-    if limit_rows is not None:
-        out = out.orderBy(
-            F.desc("prefix_total"), F.asc("prefix"), F.asc("rank")
-        ).limit(limit_rows)
-    return out
-
-
-def collocation_pmi(
-    seq: DataFrame,
-    *,
-    min_count: int = 2,
-    top_k: int | None = 100,
-    token_col: str = "tokens",
-    n_tok_col: str = "n_tok",
-    doc_col: str = "doc_id",
-) -> DataFrame:
-    """Bigram collocation mining by pointwise mutual information —
-    the association-strength statistic behind phrase tables, tokenizer
-    merge diagnostics, and boilerplate detection (a corpus whose top
-    PMI pairs are navigation chrome is telling you something).
-
-    ``pmi(a,b) = ln( p(a,b) / (p(a) p(b)) )`` with ``p(a,b) =
-    c_pair/T`` over ``T`` total bigram positions and ``p(a) = c_tok/U``
-    over ``U`` total unigram positions.  Computed as the literal
-    composition ``(c_pair/T) / ((c_a/U) * (c_b/U))`` in double on BOTH
-    engines (identical IEEE op sequence), then ``round(ln(.), 6)`` —
-    the repo's log-parity convention (cf. ``drift.py``).
-
-    Plan shape: bigram keys materialize map-side as CSV (tokens never
-    shuffle); pair counts partial-combine (hot pairs contribute one row
-    per partition); the unigram count table is VOCAB-BOUNDED, so both
-    enrichment joins broadcast; ``T``/``U`` are two scalar aggregates
-    over (n_tok) metadata — no token scan.  The min-count HAVING prunes
-    the Zipf tail pre-join; ranking is TakeOrdered on the ROUNDED pmi
-    (desc, gram asc) so the cutoff is deterministic cross-engine.
-    """
-    bi = explode_ngrams(
-        seq, 2, token_col=token_col, n_tok_col=n_tok_col, doc_col=doc_col
-    )
-    c_bi = (
-        bi.groupBy("gram")
-        .agg(F.count("*").alias("c_pair"))
-        .where(F.col("c_pair") >= min_count)
-    )
-    uni = seq.select(F.explode(token_col).alias("tok"))
-    c_uni = uni.groupBy("tok").agg(F.count("*").alias("c_tok"))
-    totals = seq.agg(
-        F.sum(F.greatest(F.col(n_tok_col) - 1, F.lit(0))).alias("t"),
-        F.sum(n_tok_col).alias("u"),
-    ).collect()[0]
-    # 2 scalars, metadata; empty corpus sums to NULL -> 1.0 keeps the
-    # (necessarily empty) plan well-defined instead of raising
-    t_bi = float(totals["t"]) if totals["t"] else 1.0
-    u_uni = float(totals["u"]) if totals["u"] else 1.0
-    pairs = c_bi.select(
-        F.split("gram", ",")[0].cast("int").alias("tok_a"),
-        F.split("gram", ",")[1].cast("int").alias("tok_b"),
-        "c_pair",
-    )
-    ca = c_uni.select(F.col("tok").alias("tok_a"), F.col("c_tok").alias("c_a"))
-    cb = c_uni.select(F.col("tok").alias("tok_b"), F.col("c_tok").alias("c_b"))
-    p_pair = F.col("c_pair").cast("double") / F.lit(t_bi)
-    p_a = F.col("c_a").cast("double") / F.lit(u_uni)
-    p_b = F.col("c_b").cast("double") / F.lit(u_uni)
-    out = (
-        pairs.join(F.broadcast(ca), "tok_a")
-        .join(F.broadcast(cb), "tok_b")
-        .select(
-            "tok_a",
-            "tok_b",
-            "c_pair",
-            "c_a",
-            "c_b",
-            F.round(F.log(p_pair / (p_a * p_b)), 6).alias("pmi"),
-        )
-    )
-    if top_k is not None:
-        out = out.orderBy(
-            F.desc("pmi"), F.asc("tok_a"), F.asc("tok_b")
-        ).limit(top_k)
-    return out
-
-
-def nucleus_sets(
-    seq: DataFrame,
-    n: int = 3,
-    *,
-    p_num: int = 9,
-    p_den: int = 10,
-    min_prefix_count: int = 8,
-    limit_rows: int | None = None,
-    token_col: str = "tokens",
-    n_tok_col: str = "n_tok",
-) -> DataFrame:
-    """Top-p (nucleus) truncation of the empirical next-token
-    distribution: for each hot (n-1)-gram prefix, the MINIMAL
-    count-ranked set of continuations whose cumulative probability
-    reaches ``p_num/p_den`` — the sampling-infrastructure table a
-    distillation/speculative-decoding pipeline precomputes from corpus
-    statistics (Holtzman et al. 2020 top-p, applied to the KenLM-style
-    count table instead of model logits).
-
-    The threshold is a RATIONAL: a token stays iff the EXCLUSIVE
-    cumulative count satisfies ``cum_excl · p_den < p_num · total``
-    (the crossing token is included, the standard convention) — pure
-    integer cross-multiplication, no float anywhere until the reported
-    share, so both engines agree bit-for-bit.
-
-    Scale shape: same narrow (prefix, next_tok) count exchange as
-    ``ngram_continuations``; ranking/cumsum are prefix-partitioned
-    windows; the HAVING-style hot-prefix cut prunes the Zipf tail
-    before the windows.  ``limit_rows`` bounds output at any SF.
-
-    Output: (prefix, prefix_total, next_tok, n_occur, rank, cum_n,
-    cum_share, nucleus_size)."""
-    m = n - 1
-    starts = F.when(
-        F.col(n_tok_col) >= n,
-        F.sequence(F.lit(0), F.col(n_tok_col) - n),
-    ).otherwise(F.array().cast("array<int>"))
-    pairs = seq.select(
-        F.explode(
-            F.transform(
-                starts,
-                lambda i: F.struct(
-                    _gram_csv(F.col(token_col), i + 1, m).alias("prefix"),
-                    F.element_at(F.col(token_col), (i + n).cast("int")).alias(
-                        "next_tok"
-                    ),
-                ),
-            )
-        ).alias("pn")
-    ).select("pn.prefix", "pn.next_tok")
-    counts = pairs.groupBy("prefix", "next_tok").agg(F.count("*").alias("n_occur"))
-    w = Window.partitionBy("prefix")
-    wrank = w.orderBy(F.desc("n_occur"), F.asc("next_tok"))
-    wcum = wrank.rowsBetween(Window.unboundedPreceding, 0)
-    staged = (
-        counts.withColumn("prefix_total", F.sum("n_occur").over(w))
-        .where(F.col("prefix_total") >= int(min_prefix_count))
-        .withColumn("rank", F.row_number().over(wrank))
-        .withColumn("cum_n", F.sum("n_occur").over(wcum))
-    )
-    # exclusive cumsum crosses the rational threshold -> token kept
-    kept = staged.where(
-        (F.col("cum_n") - F.col("n_occur")) * F.lit(int(p_den))
-        < F.lit(int(p_num)) * F.col("prefix_total")
-    )
-    wsz = Window.partitionBy("prefix")
-    out = kept.select(
-        "prefix",
-        "prefix_total",
-        "next_tok",
-        "n_occur",
-        "rank",
-        "cum_n",
-        F.round(F.col("cum_n").cast("double") / F.col("prefix_total").cast("double"), 6).alias(
-            "cum_share"
-        ),
-        F.count(F.lit(1)).over(wsz).alias("nucleus_size"),
-    )
-    if limit_rows is not None:
-        out = out.orderBy(
-            F.desc("prefix_total"), F.asc("prefix"), F.asc("rank")
-        ).limit(limit_rows)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# packed-key forms (optimization round 6)
-# ---------------------------------------------------------------------------
-#
-# Same aggregation plans as the CSV-key forms above, but the corpus-
-# sized exchanges carry an 8-byte packed gram key (16 bits/token,
-# seqkernel.packed_gram_kernel) instead of a CSV string: narrower
-# shuffle rows, integer hashing, and the gram explosion itself runs in
-# the Arrow kernel instead of an interpreted slice+join lambda chain
-# (guide §2.3/§4.2).  The CSV rendering — part of the declared output —
-# is applied AFTER aggregation/limits on result-sized frames only, and
-# tie-breaks that the contract defines on the CSV string keep using the
-# string (computed post-aggregate, pre-limit).
-
-
-def ngram_stats_packed(
-    grams: DataFrame,
-    n: int,
-    *,
-    min_count: int = 2,
-    top_k: int | None = 200,
-) -> DataFrame:
-    """``ngram_stats`` over a packed (c, g) occurrence frame.  Identical
-    output (gram CSV, n_occur, n_doc): COUNT(DISTINCT c) ==
-    COUNT(DISTINCT doc_id) because doc_id == 'doc'+c bijectively."""
-    from ..functions.seqkernel import packed_to_csv
-
-    stats = (
-        grams.groupBy("g")
-        .agg(
-            F.count("*").alias("n_occur"),
-            F.countDistinct("c").alias("n_doc"),
-        )
-        .where(F.col("n_occur") >= min_count)
-        .select(packed_to_csv("g", n).alias("gram"), "n_occur", "n_doc")
-    )
-    if top_k is not None:
-        stats = stats.orderBy(F.desc("n_occur"), F.asc("gram")).limit(top_k)
-    return stats
-
-
-def ngram_continuations_packed(
-    pairs: DataFrame,
-    n: int,
-    *,
-    k: int = 3,
-    min_prefix_count: int = 8,
-    limit_rows: int | None = None,
-) -> DataFrame:
-    """``ngram_continuations`` over a packed (c, p, next_tok) frame —
-    same windows, same rounding, same deterministic cuts."""
-    from ..functions.seqkernel import packed_to_csv
-
     counts = pairs.groupBy("p", "next_tok").agg(F.count("*").alias("n_occur"))
     w = Window.partitionBy("p")
     wrank = w.orderBy(F.desc("n_occur"), F.asc("next_tok"))
@@ -512,25 +138,51 @@ def ngram_continuations_packed(
     return out
 
 
-def lm_score_packed(
+def lm_score(
     pairs: DataFrame,
     *,
     alpha: float = 0.5,
     vocab_size: int,
     reliable: bool = False,
 ) -> DataFrame:
-    """``lm_score`` over a packed (c, p, next_tok) frame; emits
-    (doc_id, n_grams, xent, ppl) with doc_id reconstructed from c
-    post-aggregate.  ``vocab_size`` is required (compute it cheaply —
-    e.g. seqkernel.distinct_tokens_kernel — instead of the 1-token
-    explode of the generic form).  Identical float sequence: the log
-    runs on the same (c_gram, c_prefix, V) triple and xent rounds to
-    4 places before exp, absorbing sum-order differences exactly as
-    the generic form does across partitions."""
+    """Per-document n-gram LM cross-entropy / perplexity under the
+    corpus's own add-α-smoothed model — the CCNet/Gopher perplexity
+    quality filter: docs whose token stream the corpus LM finds
+    surprising (boilerplate, noise, wrong-register text) score high
+    and get cut at a ppl threshold downstream.
+
+    Input: a packed (key, p, next_tok) frame.  Output: (key, n_grams,
+    xent, ppl), the key under the caller's column name.
+
+    ``P(w|prefix) = (c(prefix,w) + α) / (c(prefix) + α·V)``;
+    ``xent = avg(-ln P)`` over the doc's n-grams, ``ppl = exp(xent)``.
+    Docs shorter than ``n`` tokens have no grams and emit no row.
+
+    Scale shape — KenLM's estimate+query collapsed to ONE corpus walk:
+    the per-(doc, gram) count table ``docgram`` is built map-side and
+    materialized once (`dedup._materialize`, the KenLM intermediate);
+    the corpus gram table is a re-aggregation of it, the prefix table a
+    re-aggregation of that (both aggregate-sized), and scoring equi-
+    joins ``docgram`` back against the scored gram table on (p, next)
+    — narrow keys, partial-combinable final per-doc fold.  ``V``
+    (vocab size) is a driver-side literal (metadata scale; avoids the
+    scalar-subquery BroadcastNestedLoopJoin) — compute it cheaply, e.g.
+    with ``seqkernel.distinct_tokens_kernel``.
+
+    Cross-engine float parity: ``xent`` rounds to 4 places and ``ppl``
+    is exp() OF THE ROUNDED xent (then rounded to 3) so both engines
+    exponentiate the identical double instead of racing associativity
+    across a much finer rounding grid.
+    """
     from bitquery_kafka_streams_rust_spark.operators.dedup import _materialize
 
+    key = _key_col(pairs, ("p", "next_tok"))
+    # docgram is corpus-sized (≈ total token positions): reliable=True
+    # swaps localCheckpoint for the lineage-keeping DISK_ONLY persist on
+    # preemptible capacity, same contract as the dedup/span/graph
+    # families (a lost executor recomputes instead of killing the job)
     docgram = _materialize(
-        pairs.groupBy("c", "p", "next_tok").agg(F.count("*").alias("k")),
+        pairs.groupBy(key, "p", "next_tok").agg(F.count("*").alias("k")),
         reliable,
     )
     cnt = docgram.groupBy("p", "next_tok").agg(F.sum("k").alias("c_gram"))
@@ -545,13 +197,13 @@ def lm_score_packed(
     )
     return (
         docgram.join(lp, ["p", "next_tok"])
-        .groupBy("c")
+        .groupBy(key)
         .agg(
             F.sum("k").alias("n_grams"),
             (F.sum(F.col("k") * -F.col("logp")) / F.sum("k")).alias("_x"),
         )
         .select(
-            F.concat(F.lit("doc"), F.col("c").cast("string")).alias("doc_id"),
+            key,
             "n_grams",
             F.round("_x", 4).alias("xent"),
             F.round(F.exp(F.round("_x", 4)), 3).alias("ppl"),
@@ -559,7 +211,7 @@ def lm_score_packed(
     )
 
 
-def nucleus_sets_packed(
+def nucleus_sets(
     pairs: DataFrame,
     n: int,
     *,
@@ -568,10 +220,28 @@ def nucleus_sets_packed(
     min_prefix_count: int = 8,
     limit_rows: int | None = None,
 ) -> DataFrame:
-    """``nucleus_sets`` over a packed (c, p, next_tok) frame — the same
-    integer cross-multiplication threshold and window stack."""
-    from ..functions.seqkernel import packed_to_csv
+    """Top-p (nucleus) truncation of the empirical next-token
+    distribution over a packed (key, p, next_tok) frame: for each hot
+    (n-1)-gram prefix, the MINIMAL count-ranked set of continuations
+    whose cumulative probability reaches ``p_num/p_den`` — the
+    sampling-infrastructure table a distillation/speculative-decoding
+    pipeline precomputes from corpus statistics (Holtzman et al. 2020
+    top-p, applied to the KenLM-style count table instead of model
+    logits).
 
+    The threshold is a RATIONAL: a token stays iff the EXCLUSIVE
+    cumulative count satisfies ``cum_excl · p_den < p_num · total``
+    (the crossing token is included, the standard convention) — pure
+    integer cross-multiplication, no float anywhere until the reported
+    share, so both engines agree bit-for-bit.
+
+    Scale shape: same narrow (p, next_tok) count exchange as
+    ``ngram_continuations``; ranking/cumsum are prefix-partitioned
+    windows; the HAVING-style hot-prefix cut prunes the Zipf tail
+    before the windows.  ``limit_rows`` bounds output at any SF.
+
+    Output: (prefix, prefix_total, next_tok, n_occur, rank, cum_n,
+    cum_share, nucleus_size)."""
     counts = pairs.groupBy("p", "next_tok").agg(F.count("*").alias("n_occur"))
     w = Window.partitionBy("p")
     wrank = w.orderBy(F.desc("n_occur"), F.asc("next_tok"))
@@ -582,6 +252,7 @@ def nucleus_sets_packed(
         .withColumn("rank", F.row_number().over(wrank))
         .withColumn("cum_n", F.sum("n_occur").over(wcum))
     )
+    # exclusive cumsum crosses the rational threshold -> token kept
     kept = staged.where(
         (F.col("cum_n") - F.col("n_occur")) * F.lit(int(p_den))
         < F.lit(int(p_num)) * F.col("prefix_total")
@@ -606,7 +277,7 @@ def nucleus_sets_packed(
     return out
 
 
-def collocation_pmi_packed(
+def collocation_pmi(
     bigrams: DataFrame,
     uni: DataFrame,
     t_bi: float,
@@ -615,11 +286,28 @@ def collocation_pmi_packed(
     min_count: int = 2,
     top_k: int | None = 100,
 ) -> DataFrame:
-    """``collocation_pmi`` over a packed (c, g) bigram frame and a
-    pre-built (tok, c_tok) unigram table, with the T/U totals passed as
-    driver-side literals (two scalar aggregates over n_tok metadata).
-    Identical IEEE op sequence for the pmi and the same deterministic
-    TakeOrdered cut."""
+    """Bigram collocation mining by pointwise mutual information —
+    the association-strength statistic behind phrase tables, tokenizer
+    merge diagnostics, and boilerplate detection (a corpus whose top
+    PMI pairs are navigation chrome is telling you something).
+
+    Inputs: a packed (key, g) bigram frame, a (tok, c_tok) unigram
+    count table, and the totals ``t_bi`` (bigram positions) and
+    ``u_uni`` (unigram positions) as driver-side literals (two scalar
+    aggregates over n_tok metadata — no token scan).
+
+    ``pmi(a,b) = ln( p(a,b) / (p(a) p(b)) )`` with ``p(a,b) =
+    c_pair/T`` and ``p(a) = c_tok/U``.  Computed as the literal
+    composition ``(c_pair/T) / ((c_a/U) * (c_b/U))`` in double on BOTH
+    engines (identical IEEE op sequence), then ``round(ln(.), 6)`` —
+    the repo's log-parity convention (cf. ``drift.py``).
+
+    Plan shape: pair counts partial-combine (hot pairs contribute one
+    row per partition); the unigram table is VOCAB-BOUNDED, so both
+    enrichment joins broadcast.  The min-count HAVING prunes the Zipf
+    tail pre-join; ranking is TakeOrdered on the ROUNDED pmi (desc,
+    tok_a, tok_b asc) so the cutoff is deterministic cross-engine.
+    """
     c_bi = (
         bigrams.groupBy("g")
         .agg(F.count("*").alias("c_pair"))

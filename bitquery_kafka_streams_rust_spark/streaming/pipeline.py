@@ -68,36 +68,18 @@ def build_event_stream(
     # terabytes and shuffling the whole table.  The checksum preserves
     # the token-array-equality invariant end to end.
     #
-    # Default: pure-JVM Catalyst expressions.  An Arrow/NumPy kernel
-    # twin exists (seqkernel.valid_events_kernel, parity-pinned) and is
-    # selectable with SPARK_GRAFT_ARROW_DECODE=1 — in the BATCH family
-    # the kernel wins decisively (guide §4.2), but under the streaming
-    # bench protocol (fresh SparkContext per run, micro-batch cadence)
-    # each new context pays a Python-worker spawn storm whose variance
-    # at high core counts dwarfed the ~1 s/epoch the kernel saves
-    # (measured: heap 4N walls [89, 25, 84, 27, 16] s kernel vs a
-    # stable ~7-11 s JVM).  Long-lived production streams amortize the
-    # spawn, so the kernel stays available; the measured default is
-    # JVM.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_ARROW_DECODE", "") == "1":
-        from ..functions import seqkernel as SKN
-
-        decoded = stream.select(
-            "doc_id", "n_tok", "source", "ts", "tokens"
-        ).mapInArrow(SKN.valid_events_kernel, SKN.VALID_EVENTS_SCHEMA)
-    else:
-        decoded = (
-            stream.where(TK.is_valid_sequence("tokens", "n_tok"))
-            .select(
-                "doc_id",
-                "n_tok",
-                "source",
-                "ts",
-                TK.token_checksum("tokens").alias("cksum"),
-            )
-        )
+    # The decode is the pure-JVM Catalyst chain, not the Arrow kernel
+    # twin (seqkernel.valid_events_kernel): each new SparkContext pays a
+    # Python-worker spawn whose variance at micro-batch cadence dwarfed
+    # the ~1 s/epoch the kernel saves (measured heap 4N walls
+    # [89, 25, 84, 27, 16] s kernel vs a stable ~7-11 s JVM).
+    decoded = stream.where(TK.is_valid_sequence("tokens", "n_tok")).select(
+        "doc_id",
+        "n_tok",
+        "source",
+        "ts",
+        TK.token_checksum("tokens").alias("cksum"),
+    )
     # filter BEFORE the stateful op where semantics allow: the gate is
     # dedup-invariant here (duplicates are bit-identical, and the gate
     # depends only on per-row columns), so pushing it below dedup shrinks

@@ -3,10 +3,14 @@ from __future__ import annotations
 import signal
 import sys
 import threading
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the repo root (package + __spark_entry__) and jobs/ (job scripts
+# imported as modules), derived from this file so any checkout works
+REPO = Path(__file__).resolve().parents[1]
+sys.path[:0] = [str(REPO), str(REPO / "jobs")]
 
 from bitquery_kafka_streams_rust_spark.session import get_spark  # noqa: E402
 

@@ -49,14 +49,15 @@ def test_engine_config_fail_fast():
 def test_pipeline_cli_state_partition_flags():
     """run_pipeline --auto-state-keys / --state-partitions feed
     ProcessingConfig.state_partitions (the checkpoint-latched value)."""
-    import sys as _sys
+    import os
 
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_pipeline as RP
 
     base = ["--input", "x", "--checkpoint", "c", "--output", "o"]
     cfg = RP.build_config(RP.parse_args([*base, "--auto-state-keys", "600000"]))
-    assert cfg.processing.state_partitions == auto_state_partitions(600_000, 32)
+    # cores as run_pipeline reads them: SPARK_GRAFT_CPUS, default 32
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    assert cfg.processing.state_partitions == auto_state_partitions(600_000, cores)
     cfg = RP.build_config(
         RP.parse_args([*base, "--state-partitions", "16", "--auto-state-keys", "1"])
     )

@@ -2,14 +2,10 @@
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
-
-import run_export as X  # noqa: E402
+import run_export as X
 
 from bitquery_kafka_streams_rust_spark import datagen  # noqa: E402
 from bitquery_kafka_streams_rust_spark.functions import tokens as TK  # noqa: E402

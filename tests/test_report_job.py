@@ -4,11 +4,8 @@ fixture, and determinism."""
 from __future__ import annotations
 
 import json
-import sys
 
-sys.path.insert(0, "/root/repo/jobs")
-
-import run_report as R  # noqa: E402
+import run_report as R
 
 
 def test_report_card_values_and_determinism(spark, sf_dir, tmp_path):

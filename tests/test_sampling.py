@@ -199,9 +199,6 @@ def test_sampling_stages_are_streaming_safe(spark, sf_dir, tmp_path):
 def test_curation_job_cli_end_to_end(spark, sf_dir, tmp_path):
     """jobs/run_curation.py: gate → budget rebalance → split → shuffle →
     partitioned parquet, and a rerun reproduces byte-identical splits."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     args = [
@@ -231,9 +228,6 @@ def test_curation_job_cli_end_to_end(spark, sf_dir, tmp_path):
 def test_curation_cli_exact_dedup(spark, sf_dir, tmp_path):
     """--exact-dedup drops duplicate-content docs (min doc_id wins) and
     the export carries no duplicate texts."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     rc = J.main([
@@ -254,9 +248,6 @@ def test_curation_cli_near_dedup(spark, sf_dir, tmp_path):
     """--near-dedup drops LSH near-duplicate cluster members (keeping
     the min-id canonical) and reruns reproduce the identical survivor
     set."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     from bitquery_kafka_streams_rust_spark.operators import dedup as DD
@@ -287,9 +278,6 @@ def test_curation_cli_near_dedup(spark, sf_dir, tmp_path):
 def test_curation_cli_near_dedup_prefix_mode(spark, sf_dir, tmp_path):
     """--near-dedup-mode prefix swaps LSH candidates for the LOSSLESS
     PPJoin pair set: survivors equal exact-Jaccard clustering."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     from bitquery_kafka_streams_rust_spark.operators import dedup as DD
@@ -396,9 +384,6 @@ def test_hash_frac_stage_decorrelates_composed_filters(spark):
 def test_curation_cli_decontaminate(spark, sf_dir, tmp_path):
     """--decontaminate drops exactly the docs sharing >= min-shared
     distinct word 5-grams with the eval corpus (and nothing else)."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     from bitquery_kafka_streams_rust_spark.operators import dedup as DD
@@ -469,9 +454,6 @@ def test_weighted_sample_plan_is_take_ordered(spark, sf_dir):
 def test_curation_cli_scrub_pii(spark, sf_dir, tmp_path):
     """--scrub-pii redacts without changing which docs survive, and
     keeps the per-doc counts."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     from bitquery_kafka_streams_rust_spark.functions import text as TX2
@@ -536,9 +518,6 @@ def test_temperature_resample_semantics(spark):
 def test_curation_cli_temperature(spark, sf_dir, tmp_path):
     """--temperature: tails upsample by repetition; copies of a doc
     never straddle splits; rerun reproduces the identical export."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     # the sf fixtures are source-uniform (alpha-sampling is an identity
@@ -583,9 +562,6 @@ def test_curation_cli_temperature(spark, sf_dir, tmp_path):
 
 def test_curation_cli_leakage_audit(spark, sf_dir, tmp_path, capsys):
     import json as _json
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     rc = J.main([
@@ -632,9 +608,6 @@ def test_mix_weights_uniform_zero_size_stratum(spark):
 def test_curation_cli_slice_terms(spark, sf_dir, tmp_path):
     """--slice-terms keeps exactly the BM25 top-k id set — the export
     is the targeted slice, and every kept doc matches a query term."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     from bitquery_kafka_streams_rust_spark.operators.retrieval import bm25_topk
@@ -692,9 +665,6 @@ def test_importance_resample_empty_text_scores_zero(spark):
 
 def test_curation_cli_anonymity_audit(spark, sf_dir, tmp_path, capsys):
     import json as _json
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     rc = J.main([

@@ -72,17 +72,26 @@ def test_valid_events_kernel_matches_filter_select(spark):
     assert {r[0] for r in _rows(fast, ["doc_id"])} == {"a", "e", "g"}
 
 
-def test_packed_grams_match_csv_ngram_stats(spark, sf_dir):
-    """Packed-key ngram_stats == CSV-key ngram_stats (full output, no
-    top-k cut, so every gram is compared)."""
+def test_ngram_stats_real_arrays_match_python_counts(spark, sf_dir):
+    """ngram_stats fed by the real-array kernel over sequences_view ==
+    a pure-Python count over the collected token arrays (full output,
+    no top-k cut, so every gram is compared; duplicate-aliased rows
+    count in n_occur but once in n_doc)."""
     seq = datagen.sequences_view(spark, sf_dir)
-    slow = NG.ngram_stats(seq, 3, min_count=2, top_k=None)
-    grams = SKN.spine_scalars(spark, sf_dir).select("_c", "n_tok").mapInArrow(
-        SKN.packed_gram_kernel(3), "c long, g long"
+    grams = seq.select("doc_id", "tokens").mapInArrow(
+        SKN.packed_gram_kernel(3, "doc_id"), "doc_id string, g long"
     )
-    fast = NG.ngram_stats_packed(grams, 3, min_count=2, top_k=None)
-    cols = ["gram", "n_occur", "n_doc"]
-    assert _rows(fast, cols) == _rows(slow, cols)
+    fast = NG.ngram_stats(grams, 3, min_count=2, top_k=None)
+    occ, docs = {}, {}
+    for r in seq.select("doc_id", "tokens").collect():
+        t = r["tokens"]
+        for i in range(len(t) - 2):
+            gram = ",".join(map(str, t[i:i + 3]))
+            occ[gram] = occ.get(gram, 0) + 1
+            docs.setdefault(gram, set()).add(r["doc_id"])
+    want = sorted((g, k, len(docs[g])) for g, k in occ.items() if k >= 2)
+    assert len(want) > 0
+    assert _rows(fast, ["gram", "n_occur", "n_doc"]) == want
 
 
 def test_gram_hash_kernels_match_token_gram_hashes(spark, sf_dir):
@@ -154,20 +163,24 @@ def test_cdc_chunk_kernel_matches_chunk_table(spark, sf_dir):
 
 
 def test_exploded_builders_match_kernels(spark, sf_dir):
-    """Codegen exploded builders == the kernel emissions (and hence the
-    interpreted forms pinned elsewhere): packed grams, packed prefixes,
-    gram positions, token positions."""
+    """Codegen exploded builders over the generator spine == the kernel
+    emissions: packed grams and prefixes against the real-array kernels
+    over sequences_view (keyed by doc_id == 'doc'||c), gram and token
+    positions against their generator-fused kernels."""
     spine = SKN.spine_scalars(spark, sf_dir)
-    fast_g = datagen.exploded_packed_grams(spine, 3)
-    slow_g = spine.select("_c", "n_tok").mapInArrow(
-        SKN.packed_gram_kernel(3), "c long, g long"
+    seq = datagen.sequences_view(spark, sf_dir).select("doc_id", "tokens")
+    doc_id = F.concat(F.lit("doc"), F.col("c").cast("string")).alias("doc_id")
+    fast_g = datagen.exploded_packed_grams(spine, 3).select(doc_id, "g")
+    slow_g = seq.mapInArrow(
+        SKN.packed_gram_kernel(3, "doc_id"), "doc_id string, g long"
     )
-    assert _rows(fast_g, ["c", "g"]) == _rows(slow_g, ["c", "g"])
-    fast_p = datagen.exploded_packed_prefix(spine, 3)
-    slow_p = spine.select("_c", "n_tok").mapInArrow(
-        SKN.packed_prefix_kernel(3), "c long, p long, next_tok int"
+    assert _rows(fast_g, ["doc_id", "g"]) == _rows(slow_g, ["doc_id", "g"])
+    fast_p = datagen.exploded_packed_prefix(spine, 3).select(doc_id, "p", "next_tok")
+    slow_p = seq.mapInArrow(
+        SKN.packed_prefix_kernel(3, "doc_id"), "doc_id string, p long, next_tok int"
     )
-    assert _rows(fast_p, ["c", "p", "next_tok"]) == _rows(slow_p, ["c", "p", "next_tok"])
+    cols = ["doc_id", "p", "next_tok"]
+    assert _rows(fast_p, cols) == _rows(slow_p, cols)
     fast_pos = datagen.exploded_gram_positions(spine, 8)
     slow_pos = spine.select("_c", "n_tok").mapInArrow(
         SKN.gram_positions_kernel(n=8), "c long, pos long, g long"
@@ -227,6 +240,20 @@ def test_minhash_sig_kernel_matches_interpreted(spark, sf_dir):
     assert a == b
 
 
+def test_segment_reduce_trailing_empty_segments():
+    """Empty segments anywhere — last included — reduce to ``empty``
+    and never truncate the non-empty segment before them."""
+    import numpy as np
+
+    flat = np.array([1, 2, 3, 4, 5], dtype=np.int64)
+    got = SKN._segment_reduce(np.add, flat, np.array([0, 0, 3, 5]),
+                              np.array([0, 3, 2, 0]), 0)
+    assert got.tolist() == [0, 6, 9, 0]
+    got = SKN._segment_reduce(np.maximum, flat[:3], np.array([0, 3]),
+                              np.array([3, 0]), -1)
+    assert got.tolist() == [3, -1]
+
+
 def test_cksum_from_tokens_kernel(spark, sf_dir):
     seq = datagen.sequences_view(spark, sf_dir)
     slow = seq.select("doc_id", "n_tok", TK.token_checksum("tokens").alias("cksum"))
@@ -235,3 +262,16 @@ def test_cksum_from_tokens_kernel(spark, sf_dir):
     )
     cols = ["doc_id", "n_tok", "cksum"]
     assert _rows(fast, cols) == _rows(slow, cols)
+    # one Arrow batch whose LAST row is empty, then one whose last row
+    # is NULL: the non-empty row before it must keep its full checksum
+    for tail in ([], None):
+        rows = [("x", [5, 1, 7], 3), ("y", [2, 9], 2), ("z", tail, 0)]
+        df = spark.createDataFrame(
+            rows, "doc_id string, tokens array<int>, n_tok int"
+        ).coalesce(1)
+        slow = df.select("doc_id", "n_tok", TK.token_checksum("tokens").alias("cksum"))
+        fast = df.mapInArrow(
+            SKN.cksum_from_tokens_kernel, "doc_id string, n_tok int, cksum bigint"
+        )
+        assert _rows(fast, cols) == _rows(slow, cols)
+        assert ("y", 2, 20) in _rows(fast, cols)

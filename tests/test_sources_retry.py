@@ -143,9 +143,6 @@ def test_retry_preserves_exactly_once(spark, tmp_path):
 
 def test_job_cli_end_to_end(spark, tmp_path):
     """jobs/run_pipeline.py argument parse + config build + availableNow run."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
     import run_pipeline as J
 
     from bitquery_kafka_streams_rust_spark import datagen

@@ -351,12 +351,18 @@ def test_streaming_cms_sketch_matches_batch(spark, sf_dir, tmp_path):
 
 def test_streaming_ngram_counts_match_batch(spark, sf_dir, tmp_path):
     """The LM n-gram count table as a streaming aggregation: grams
-    materialize map-side per micro-batch and the running groupBy holds
-    ONE counter per distinct gram — state bounded by gram vocabulary,
-    not stream length.  Streaming the corpus through must land on the
-    identical count table as the batch pass."""
+    materialize map-side per micro-batch (the real-array packed kernel)
+    and the running groupBy holds ONE counter per distinct gram — state
+    bounded by gram vocabulary, not stream length.  Streaming the corpus
+    through must land on the identical count table as the batch pass."""
     from bitquery_kafka_streams_rust_spark.datagen import sequences_view
+    from bitquery_kafka_streams_rust_spark.functions import seqkernel as SKN
     from bitquery_kafka_streams_rust_spark.operators import ngrams as NG
+
+    def grams(df):
+        return df.select("doc_id", "tokens").mapInArrow(
+            SKN.packed_gram_kernel(3, "doc_id"), "doc_id string, g long"
+        )
 
     in_dir = str(tmp_path / "in")
     sequences_view(spark, sf_dir).coalesce(2).write.parquet(in_dir)
@@ -367,9 +373,10 @@ def test_streaming_ngram_counts_match_batch(spark, sf_dir, tmp_path):
         .parquet(in_dir)
     )
     q = (
-        NG.explode_ngrams(stream, 3)
-        .groupBy("gram")
+        grams(stream)
+        .groupBy("g")
         .count()
+        .select(SKN.packed_to_csv("g", 3).alias("gram"), "count")
         .writeStream.format("memory")
         .queryName("ngram_stream")
         .outputMode("complete")
@@ -385,7 +392,7 @@ def test_streaming_ngram_counts_match_batch(spark, sf_dir, tmp_path):
     }
     want = {
         r["gram"]: r["n_occur"]
-        for r in NG.ngram_stats(batch, 3, min_count=1, top_k=None).collect()
+        for r in NG.ngram_stats(grams(batch), 3, min_count=1, top_k=None).collect()
     }
     assert len(got) > 0 and got == want
 

@@ -29,7 +29,7 @@ def test_spark_submit_py_files_resolves_package(tmp_path):
                     full = os.path.join(dirpath, f)
                     zf.write(full, os.path.relpath(full, root))
     job = tmp_path / "job.py"
-    shutil.copy("/root/repo/jobs/run_curation.py", job)
+    shutil.copy(os.path.join(root, "jobs", "run_curation.py"), job)
     out = subprocess.run(
         [
             "spark-submit", "--master", "local[2]", "--py-files", str(z), str(job),

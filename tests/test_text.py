@@ -165,9 +165,6 @@ def test_curation_cli_classifier_gate(spark, sf_dir, tmp_path):
     """--classifier-min-score cuts exactly the docs below the score
     threshold (same surviving set as applying the column filter
     directly)."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/jobs")
     import run_curation as J
 
     rc = J.main([
@@ -192,9 +189,6 @@ def test_curation_cli_classifier_gate(spark, sf_dir, tmp_path):
 
 
 def test_langid_confusion_query_shape(spark, sf_dir):
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
 
     rows = E.queries()["doc_langid_confusion"](spark, sf_dir).collect()
