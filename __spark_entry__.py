@@ -159,7 +159,7 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     rpt = _TBL_PARALLEL.get(name)
     if rpt:
-        rows, parts = datagen.table_meta(sf_dir, name)
+        rows, parts = datagen.table_meta(spark, sf_dir, name)
         df = datagen.ensure_parallel(
             df,
             spark.sparkContext.defaultParallelism,
@@ -3314,16 +3314,15 @@ ORDER BY source, bucket, bin_idx
 
 
 def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, portable-hash variant (polynomial
-    shingle/band hashes → the identical pipeline runs as the DuckDB
-    oracle; the xxhash64 scale path keeps its own pytest)."""
+    """MinHash+LSH near-dup pairs (polynomial shingle/band hashes →
+    the identical pipeline runs as the DuckDB oracle)."""
     docs = _tbl(spark, sf_dir, "documents")
-    return DD.minhash_lsh_pairs(docs, threshold=0.4, portable=True).orderBy("id_a", "id_b")
+    return DD.minhash_lsh_pairs(docs, threshold=0.4).orderBy("id_a", "id_b")
 
 
 # char-5-shingle polynomial hashes → 64 minhashes (one aggregate pass)
 # → 16 bands × 4 rows → band-hash equi-join → signature-similarity verify;
-# mirrors operators/dedup.py minhash_lsh_pairs(portable=True) term for term
+# mirrors operators/dedup.py minhash_lsh_pairs term for term
 # shared CTE body: everything up to the `est` candidate-similarity
 # table — reused verbatim by the triplet-mining oracle below
 _MINHASH_BODY = """
@@ -3398,9 +3397,9 @@ def _q_doc_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     new_corpus = docs.where(F.col("doc_id") % 10 != 1)
-    return DD.incremental_minhash_pairs(
-        new_corpus, changed, threshold=0.4, portable=True
-    ).orderBy("id_a", "id_b")
+    return DD.incremental_minhash_pairs(new_corpus, changed, threshold=0.4).orderBy(
+        "id_a", "id_b"
+    )
 
 
 # the full-recompute _SQL_MINHASH pipeline restricted to the new
@@ -3506,7 +3505,7 @@ def _q_doc_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _tbl(spark, sf_dir, "documents")
     probe = docs.where(F.col("doc_id") % 10 == 0)
     index = docs.where(F.col("doc_id") % 10 != 0)
-    return ND.probe_index_batch(probe, index, threshold=0.4, portable=True).orderBy(
+    return ND.probe_index_batch(probe, index, threshold=0.4).orderBy(
         "probe_id", "index_id"
     )
 
@@ -3564,7 +3563,7 @@ def _q_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bitquery_kafka_streams_rust_spark.operators import graph as GR
 
     docs = _tbl(spark, sf_dir, "documents")
-    pairs = DD.minhash_lsh_pairs(docs, threshold=0.4, portable=True)
+    pairs = DD.minhash_lsh_pairs(docs, threshold=0.4)
     return GR.pagerank(pairs, n_iter=5)
 
 
@@ -3635,15 +3634,14 @@ SELECT id, round(pr, 6) AS pr FROM p5 ORDER BY id
 
 
 def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs, portable 32-bit variant (oracle-checked;
-    the 64-bit xxhash64 scale path keeps its own pytest)."""
+    """SimHash near-dup pairs (32-bit, oracle-checked)."""
     docs = _tbl(spark, sf_dir, "documents")
-    return DD.simhash_near_dups(docs, max_hamming=6, portable=True).orderBy("id_a", "id_b")
+    return DD.simhash_near_dups(docs, max_hamming=6).orderBy("id_a", "id_b")
 
 
 # 32-bit simhash from polynomial shingle hashes (bit b = universal hash
 # parity), 4 × 8-bit chunk blocking, bit_count(xor) verify — the exact
-# plan of simhash_near_dups(portable=True)
+# plan of simhash_near_dups
 _SQL_SIMHASH = """
 WITH cs AS (
   SELECT doc_id AS id,
@@ -4888,7 +4886,7 @@ def _q_doc_neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bitquery_kafka_streams_rust_spark.operators import graph as GR
 
     docs = _tbl(spark, sf_dir, "documents")
-    pairs = DD.minhash_lsh_pairs(docs, threshold=0.4, portable=True)
+    pairs = DD.minhash_lsh_pairs(docs, threshold=0.4)
     return GR.triangle_stats(pairs)
 
 
@@ -6936,7 +6934,7 @@ def _q_doc_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     and restart, no RNG state.  Bucket top-3 is a bucket-partitioned
     WindowGroupLimit over metadata; join is broadcast."""
     docs = _tbl(spark, sf_dir, "documents")
-    pairs = DD.minhash_lsh_pairs(docs, threshold=0.4, portable=True)
+    pairs = DD.minhash_lsh_pairs(docs, threshold=0.4)
     return SIM.contrastive_triplets(
         docs.select(F.col("doc_id").alias("id")), pairs, n_buckets=64
     ).orderBy("anchor", "positive")

@@ -87,19 +87,20 @@ def ensure_parallel(
     return df
 
 
-def table_meta(sf_dir: str, name: str) -> tuple[int, int]:
+def table_meta(spark: SparkSession, sf_dir: str, name: str) -> tuple[int, int]:
     """(rows, estimated scan partitions) from parquet footers and file
     sizes — no Spark job, no df.rdd materialization.  The partition
-    estimate mirrors Spark's split math coarsely (bytes /
-    maxPartitionBytes per file, min 1), which is all the no-op guard
-    needs.  Metadata only: nothing about query RESULTS is cached."""
+    estimate mirrors Spark's split math coarsely (bytes / the session's
+    ``spark.sql.files.maxPartitionBytes`` per file, min 1), which is all
+    the no-op guard needs.  Metadata only: nothing about query RESULTS
+    is cached."""
     import glob as _glob
     import os as _os
 
     import pyarrow.parquet as _pq
 
-    max_part = int(_os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES",
-                                   str(32 * 1024 * 1024)))
+    # SQLConf's typed getter: the conf may be set as "64m", "1g", ...
+    max_part = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     path_glob = f"{sf_dir}/{name}.parquet"
     rows = 0
     parts = 0
@@ -110,10 +111,6 @@ def table_meta(sf_dir: str, name: str) -> tuple[int, int]:
         except Exception:
             return 0, 0  # unknown -> caller falls back to core-count target
     return rows, parts
-
-
-def table_rows(sf_dir: str, name: str) -> int:
-    return table_meta(sf_dir, name)[0]
 
 
 def sequences_view(
@@ -129,7 +126,7 @@ def sequences_view(
     ride the exchange).
     """
     # ~1.5M tokens of interpreted HOF work per task (rows_per_task=1500)
-    rows, parts = table_meta(sf_dir, "documents") if min_parallelism else (None, None)
+    rows, parts = table_meta(spark, sf_dir, "documents") if min_parallelism else (None, None)
     docs = ensure_parallel(
         spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id"),
         min_parallelism,
@@ -287,7 +284,7 @@ def shards_view(
     duplicate-alias rows emit no shards (one shard set per doc_id), and
     shard ts is offset by shard_id minutes (join-window test).
     """
-    rows, parts = table_meta(sf_dir, "documents") if min_parallelism else (None, None)
+    rows, parts = table_meta(spark, sf_dir, "documents") if min_parallelism else (None, None)
     docs = ensure_parallel(
         spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id"),
         min_parallelism,

@@ -277,7 +277,7 @@ def spine_scalars(spark, sf_dir: str, prefilter=None):
 
     from .. import datagen
 
-    rows, parts = datagen.table_meta(sf_dir, "documents")
+    rows, parts = datagen.table_meta(spark, sf_dir, "documents")
     docs = datagen.ensure_parallel(
         spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id"),
         spark.sparkContext.defaultParallelism,
@@ -779,23 +779,33 @@ def cdc_chunk_kernel(w: int = 8, boundary_bits: int = 5,
 
 
 def _string_codes(arr: pa.Array):
-    """(codes int64 flat, starts, lengths) of a string column — char
-    CODEPOINTS, matching Spark ascii()/DuckDB ascii() per character.
-    ASCII fast path reads the UTF-8 buffer directly (byte == codepoint);
-    any non-ASCII byte falls back to per-row ord() decoding so the
-    kernel stays correct on arbitrary text."""
+    """(codes int64 flat, starts, lengths, null_mask) of a string column
+    — char CODEPOINTS, matching Spark ascii()/DuckDB ascii() per
+    character.  NULL rows get length 0 and are flagged in ``null_mask``
+    (None when the column has none), so callers can tell them from
+    ``""``.  ASCII fast path reads the UTF-8 buffer directly (byte ==
+    codepoint, sliced arrays honored); any non-ASCII byte falls back to
+    per-row ord() decoding so the kernel stays correct on arbitrary
+    text."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    buf_off = np.frombuffer(arr.buffers()[1], dtype=np.int32)
+    n = len(arr)
+    nulls = np.asarray(arr.is_null()) if arr.null_count else None
+    if n == 0:  # a zero-row batch may arrive without an offsets buffer
+        empty = np.zeros(0, np.int64)
+        return empty, empty, empty, nulls
+    off_buf, data_buf = arr.buffers()[1:3]
     lo = arr.offset
-    offsets = buf_off[lo:lo + len(arr) + 1].astype(np.int64)
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+    offsets = np.frombuffer(off_buf, dtype=np.int32)[lo:lo + n + 1].astype(np.int64)
     lengths = offsets[1:] - offsets[:-1]
-    seg = data[offsets[0]:offsets[-1]]
-    if seg.size == 0 or (seg < 0x80).all():
-        rid, pos, starts = _flat_positions(lengths)
-        flat = data[np.repeat(offsets[:-1], lengths) + pos].astype(np.int64)
-        return flat, starts, lengths
+    if nulls is not None:
+        lengths = np.where(nulls, 0, lengths)  # a NULL slot may span bytes
+    rid, pos, starts = _flat_positions(lengths)
+    data = (np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None
+            else np.zeros(0, np.uint8))
+    flat = data[np.repeat(offsets[:-1], lengths) + pos]
+    if (flat < 0x80).all():
+        return flat.astype(np.int64), starts, lengths, nulls
     # non-ASCII fallback: decode row by row (codepoint semantics)
     texts = arr.to_pylist()
     lengths = np.array([0 if t is None else len(t) for t in texts], dtype=np.int64)
@@ -805,14 +815,14 @@ def _string_codes(arr: pa.Array):
     )
     starts = np.zeros(len(lengths), dtype=np.int64)
     np.cumsum(lengths[:-1], out=starts[1:])
-    return flat, starts, lengths
+    return flat, starts, lengths, nulls
 
 
 def minhash_sig_kernel(num_hashes: int = 64, k: int = 5,
                        base: int = 313, mod: int = P31,
                        prime: int = 4294967311):
     """mapInArrow kernel: (id, text) -> (id, sig array<long>) — the
-    PORTABLE MinHash signature (dedup.minhash_signature portable=True)
+    MinHash signature (dedup.minhash_signature, its JVM reference form)
     in one vectorized pass: char-code k-shingle polynomial hashes, then
     per-slot minima of the large-multiplier universal hash family.  The
     interpreted form pays |shingles| x num_hashes lambda steps per doc;
@@ -820,11 +830,13 @@ def minhash_sig_kernel(num_hashes: int = 64, k: int = 5,
     multiply-add + segmented min.  min over the shingle MULTISET equals
     min over the distinct set, so no distinct pass is needed.  Values
     are bit-identical (same coefficients, same modulus, int64-exact:
-    x < 2^31 times max multiplier ~2.66e9 stays < 2^63)."""
+    x < 2^31 times max multiplier ~2.66e9 stays < 2^63).  NULL text
+    yields a NULL sig, as the JVM form does; ``""`` is one empty
+    shingle like any text shorter than ``k``."""
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
             ids = batch.column("id")
-            flat, starts, lengths = _string_codes(batch.column("text"))
+            flat, starts, lengths, nulls = _string_codes(batch.column("text"))
             n_rows = batch.num_rows
             rid, pos, _ = _flat_positions(lengths)
             # shingle hashes: k-window poly for rows len>=k, whole-string
@@ -864,6 +876,7 @@ def minhash_sig_kernel(num_hashes: int = 64, k: int = 5,
                 pa.array(np.arange(0, (n_rows + 1) * num_hashes, num_hashes,
                                    dtype=np.int32)),
                 pa.array(sig.reshape(-1), type=pa.int64()),
+                mask=None if nulls is None else pa.array(nulls),
             )
             yield pa.RecordBatch.from_arrays([ids, sig_list], names=["id", "sig"])
 

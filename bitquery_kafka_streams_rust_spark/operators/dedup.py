@@ -11,7 +11,12 @@ Exact/windowed dedup re-expresses the reference's signature caches:
 Near-dup family (training-data pipeline ops, no reference analog):
 exact text hash, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine.
 All are shuffle-aware: candidate generation goes through band/bucket
-equi-joins (shuffle on short keys), never a cross join.
+equi-joins (shuffle on short keys), never a cross join.  MinHash and
+SimHash share one hash family: polynomial char-code shingle hashes and
+universal-hash permutations in plain integer arithmetic, so the DuckDB
+oracles replay them exactly.  MinHash signatures come from one Arrow
+kernel projection (:func:`minhash_sigs`) for batch pairs, the CDC delta
+and the streaming gate alike.
 """
 
 from __future__ import annotations
@@ -111,77 +116,75 @@ def _windowed_poly(longs: Column, k: int, base: int = 313, mod: int = _P31) -> C
     return acc
 
 
-def _shingles(text: Column, k: int = 5, portable: bool = False) -> Column:
-    """Character k-shingle hashes as array<long> (distinct).
-
-    ``portable=False`` (the 100 TB default) hashes with xxhash64;
-    ``portable=True`` uses a polynomial hash over char codes so the
-    identical shingle set is computable in the DuckDB oracle."""
-    n = F.length(text)
-    if portable:
-        codes = _char_codes(text)
-        sh = F.when(n < k, F.array(_poly_hash(codes))).otherwise(
-            _windowed_poly(codes, k)
-        )
-    else:
-        sh = F.when(n < k, F.array(F.xxhash64(text))).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), n - k + 1),
-                lambda i: F.xxhash64(text.substr(i, F.lit(k))),
-            )
-        )
+def _shingles(text: Column, k: int = 5) -> Column:
+    """Character k-shingle hashes as array<long> (distinct): a
+    polynomial hash over char codes, so the identical shingle set is
+    computable in the DuckDB oracle.  Texts shorter than ``k`` (the
+    empty string included) are one whole-string shingle; NULL text
+    yields NULL."""
+    codes = _char_codes(text)
+    sh = F.when(F.length(text) < k, F.array(_poly_hash(codes))).otherwise(
+        _windowed_poly(codes, k)
+    )
     return F.array_distinct(sh)
 
 
-def minhash_signature(text: Column, num_hashes: int = 64, portable: bool = False) -> Column:
-    """MinHash signature as array<long>[num_hashes].
+def minhash_signature(text: Column, num_hashes: int = 64) -> Column:
+    """MinHash signature as array<long>[num_hashes] — the interpreted
+    JVM REFERENCE form.  Operators never call it: every signature comes
+    from :func:`minhash_sigs` (the Arrow kernel), and this form stays
+    only as the reference ``test_minhash_sig_kernel_matches_interpreted``
+    compares that kernel against, slot for slot.
 
-    h_j(x) = (a_j * x + b_j) mod PRIME with deterministic (a_j, b_j).
-    Computed as ONE aggregate pass over the shingle set with a
-    num_hashes-wide min accumulator (a 64-pass formulation builds an
-    expression tree too large for codegen and runs ~50x slower).
-
-    The portable path uses LARGE multipliers (2654435761 + 40503·j):
-    its inputs are 31-bit polynomial hashes, and with small multipliers
-    ``x·a_j`` often doesn't wrap the ~2^32 modulus, leaving the
+    h_j(x) = (x * (2654435761 + 40503*j) + 7919*j + 7) mod PRIME,
+    computed as ONE aggregate pass over the shingle set with a
+    num_hashes-wide min accumulator.  The multipliers are LARGE because
+    the inputs are 31-bit polynomial hashes: with small multipliers
+    ``x*a_j`` often doesn't wrap the ~2^32 modulus, leaving the
     "permutation" order-preserving — every h_j picks the same small
-    shingle and signatures collapse.  2^31 × max(a_j) ≈ 5.7e18 stays
-    int64-safe in both Spark and DuckDB.  The xxhash64 path keeps the
-    small-multiplier family: its x already spans 64 bits (and a large
-    multiplier would overflow there)."""
-    sh = _shingles(text, portable=portable)
+    shingle and signatures collapse.  2^31 * max(a_j) ~ 5.7e18 stays
+    int64-safe in both Spark and DuckDB."""
+    sh = _shingles(text)
     js = F.sequence(F.lit(0), F.lit(num_hashes - 1))
     init = F.transform(js, lambda j: F.lit(_H_PRIME).cast("long"))
-    if portable:
-        perm = lambda x, j: (x * (F.lit(2654435761) + j * 40503) + j * 7919 + 7) % _H_PRIME
-    else:
-        perm = lambda x, j: ((x % _H_PRIME) * (j * 2 + 1) + j * 40503 + 7) % _H_PRIME
+    perm = lambda x, j: (x * (F.lit(2654435761) + j * 40503) + j * 7919 + 7) % _H_PRIME
     return F.aggregate(
         sh,
         init,
-        lambda acc, x: F.zip_with(
-            acc,
-            js,
-            lambda a, j: F.least(a, perm(x, j)),
-        ),
+        lambda acc, x: F.zip_with(acc, js, lambda a, j: F.least(a, perm(x, j))),
     )
 
 
-def _band_explode(sig_col: Column, num_hashes: int, bands: int, portable: bool) -> Column:
-    """posexplode(per-band hashes of a signature column) — alias the
-    result as ("band", "band_hash").  Shared by the batch MinHash
-    family and the streaming gate so batch and stream probe the SAME
-    index arithmetic."""
+def minhash_sigs(docs: DataFrame, id_col: str, text_col: str, num_hashes: int) -> DataFrame:
+    """(id, sig array<long>) — the ONE signature producer of the MinHash
+    family: batch pairs, the CDC delta and the streaming gate all call
+    it.  The Arrow kernel (seqkernel.minhash_sig_kernel) does per
+    permutation one vectorized multiply-add + segmented min, where the
+    interpreted :func:`minhash_signature` pays |shingles| x num_hashes
+    lambda steps per doc; values are bit-identical.  NULL text gets a
+    NULL sig, whose band hashes are NULL and so never join.  Works on
+    streaming frames (a stateless per-batch map)."""
+    from ..functions.seqkernel import minhash_sig_kernel
+
+    narrow = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    id_type = narrow.schema["id"].dataType.simpleString()
+    return narrow.mapInArrow(
+        minhash_sig_kernel(num_hashes), f"id {id_type}, sig array<long>"
+    )
+
+
+def _band_explode(sig_col: Column, num_hashes: int, bands: int) -> Column:
+    """posexplode(per-band polynomial hashes of a signature column) —
+    alias the result as ("band", "band_hash").  Shared by the batch
+    MinHash family and the streaming gate so batch and stream probe the
+    SAME index arithmetic."""
     rows_per_band = num_hashes // bands
-    band_hash = (
-        (lambda sl: _poly_hash(sl, base=1000003))
-        if portable
-        else (lambda sl: F.xxhash64(sl.cast("string")))
-    )
     return F.posexplode(
         F.transform(
             F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: band_hash(F.slice(sig_col, b * rows_per_band + 1, rows_per_band)),
+            lambda b: _poly_hash(
+                F.slice(sig_col, b * rows_per_band + 1, rows_per_band), base=1000003
+            ),
         )
     )
 
@@ -192,51 +195,41 @@ def _banded_sigs(
     text_col: str,
     num_hashes: int,
     bands: int,
-    portable: bool,
     reliable: bool,
 ) -> tuple[DataFrame, DataFrame]:
     """(sig, banded) for the MinHash family: one signature pass total —
     the sig subplan feeds several branches (band explode + verify
-    joins) and the interpreted-HOF signature is the dominant compute,
-    so it is materialized executor-local instead of recomputed per
-    branch (same pattern as connected_components' per-round
+    joins), so it is materialized executor-local instead of recomputed
+    per branch (same pattern as connected_components' per-round
     checkpoint; ~0.5 KB/row stored, the volume one shuffle of it
     would spill anyway).  ``banded`` rows are NARROW (id, band,
     band_hash) — signatures never ride the band-join exchanges."""
-    if portable:
-        # portable signatures run in the Arrow kernel (seqkernel.
-        # minhash_sig_kernel, parity-pinned): the interpreted aggregate
-        # pays |shingles| x num_hashes lambda steps per doc, the kernel
-        # one vectorized multiply-add + segmented min per permutation
-        # (guide §4.2).  xxhash64 signatures stay JVM-side (the hash
-        # itself is a JVM intrinsic there).
-        from ..functions.seqkernel import minhash_sig_kernel
-
-        narrow = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-        id_type = narrow.schema["id"].dataType.simpleString()
-        sig = _materialize(
-            narrow.mapInArrow(
-                minhash_sig_kernel(num_hashes), f"id {id_type}, sig array<long>"
-            ),
-            reliable,
-        )
-    else:
-        sig = _materialize(
-            docs.select(
-                F.col(id_col).alias("id"),
-                minhash_signature(
-                    F.col(text_col), num_hashes, portable=portable
-                ).alias("sig"),
-            ),
-            reliable,
-        )
+    sig = _materialize(minhash_sigs(docs, id_col, text_col, num_hashes), reliable)
     banded = sig.select(
-        "id",
-        _band_explode(F.col("sig"), num_hashes, bands, portable).alias(
-            "band", "band_hash"
-        ),
+        "id", _band_explode(F.col("sig"), num_hashes, bands).alias("band", "band_hash")
     )
     return sig, banded
+
+
+def est_jaccard(sig_a: str, sig_b: str, num_hashes: int) -> Column:
+    """Signature similarity: the share of equal slots (aliased
+    ``est_jaccard``) — the verify step of every MinHash operator."""
+    same = F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda m: m)
+    return (F.size(same) / F.lit(num_hashes)).alias("est_jaccard")
+
+
+def _verify_pairs(
+    cand: DataFrame, sig: DataFrame, num_hashes: int, threshold: float
+) -> DataFrame:
+    """Re-join the signatures ONCE per side onto deduplicated bare
+    (id_a, id_b) candidates and keep pairs with est_jaccard >=
+    threshold."""
+    paired = cand.join(
+        sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
+    ).join(sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
+    return paired.select(
+        "id_a", "id_b", est_jaccard("sig_a", "sig_b", num_hashes)
+    ).where(F.col("est_jaccard") >= threshold)
 
 
 def minhash_lsh_pairs(
@@ -246,27 +239,24 @@ def minhash_lsh_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.8,
-    portable: bool = False,
     reliable: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH, verified by signature
     similarity ≥ threshold.
 
-    Plan shape (scale path): signature projection → banded id rows
-    (×16, NARROW — ids + band hash only) → shuffle on (band, band_hash)
-    equi-join → pair dedup on bare (id_a, id_b) → signatures re-joined
-    ONCE per side for the verify.  The 64-wide signature arrays never
-    ride the band-join or pair-dedup exchanges (the same fat-column
-    rule as the token checksum): a dense near-dup family matches in all
-    ``bands`` bands, so carrying signatures pre-dedup multiplies the
-    shuffled bytes ×bands×|sig| — measured 180 s → 17 s at sf0.1, where
-    5k docs produce 700k candidate pairs.  No cross join anywhere; the
-    band join's key cardinality grows with data so it parallelizes
-    across the cluster.  ``portable=True`` swaps xxhash64 for
-    polynomial hashes so the whole operator has a DuckDB oracle twin."""
-    sig, banded = _banded_sigs(
-        docs, id_col, text_col, num_hashes, bands, portable, reliable
-    )
+    Plan shape: signature projection → banded id rows (×16, NARROW —
+    ids + band hash only) → shuffle on (band, band_hash) equi-join →
+    pair dedup on bare (id_a, id_b) → signatures re-joined ONCE per
+    side for the verify.  The 64-wide signature arrays never ride the
+    band-join or pair-dedup exchanges (the same fat-column rule as the
+    token checksum): a dense near-dup family matches in all ``bands``
+    bands, so carrying signatures pre-dedup multiplies the shuffled
+    bytes ×bands×|sig| — measured 180 s → 17 s on 5k docs producing
+    700k candidate pairs.  No cross join anywhere; the band
+    join's key cardinality grows with data so it parallelizes across
+    the cluster.  Every hash is polynomial integer arithmetic, so the
+    whole operator has a DuckDB oracle twin."""
+    sig, banded = _banded_sigs(docs, id_col, text_col, num_hashes, bands, reliable)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -278,14 +268,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    paired = cand.join(
-        sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
-    ).join(sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m))
-        / F.lit(num_hashes)
-    ).alias("est_jaccard")
-    return paired.select("id_a", "id_b", est).where(F.col("est_jaccard") >= threshold)
+    return _verify_pairs(cand, sig, num_hashes, threshold)
 
 
 def incremental_minhash_pairs(
@@ -296,7 +279,6 @@ def incremental_minhash_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.8,
-    portable: bool = False,
     reliable: bool = False,
 ) -> DataFrame:
     """Incremental near-dup index maintenance (CDC × MinHash): the
@@ -317,9 +299,7 @@ def incremental_minhash_pairs(
     band join, pair normalization (least/greatest + dedup) and both
     verify joins move narrow id/hash rows only; signatures never ride
     an exchange, same as the full operator."""
-    sig, banded = _banded_sigs(
-        corpus, id_col, text_col, num_hashes, bands, portable, reliable
-    )
+    sig, banded = _banded_sigs(corpus, id_col, text_col, num_hashes, bands, reliable)
     ch = changed_ids.select(F.col(changed_ids.columns[0]).alias("id")).distinct()
     probe = banded.join(ch, "id", "left_semi")
     a, b = probe.alias("a"), banded.alias("b")
@@ -336,44 +316,32 @@ def incremental_minhash_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    paired = cand.join(
-        sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
-    ).join(sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m))
-        / F.lit(num_hashes)
-    ).alias("est_jaccard")
-    return paired.select("id_a", "id_b", est).where(F.col("est_jaccard") >= threshold)
+    return _verify_pairs(cand, sig, num_hashes, threshold)
 
 
-def simhash(text: Column, bits: int = 64, portable: bool = False) -> Column:
-    """SimHash over character 5-shingles, JVM-side.
+_SIMHASH_BITS = 32  # non-negative in a BIGINT on both engines
 
-    For each bit b: sign(sum over shingles of ±1 by shingle-hash bit b).
-    ONE aggregate pass with a bits-wide counter accumulator (not one
+
+def simhash(text: Column) -> Column:
+    """32-bit SimHash over character 5-shingles, JVM-side.
+
+    For each bit b: sign(sum over shingles of ±1 by bit b), where bit b
+    of shingle hash x is the parity of a per-bit universal hash
+    ``((x*(2654435761 + 40503*b) + 7919*b + 3) % (2^31-1)) % 2`` —
+    identical arithmetic runs in DuckDB, making the operator
+    oracle-checkable.  The multipliers are large for the same reason as
+    :func:`minhash_signature`'s: 31-bit x times a small odd a barely
+    wraps the modulus, making bit parities correlate across b.  ONE
+    aggregate pass with a 32-wide counter accumulator (not one
     aggregate per bit — that expression tree defeats codegen), then the
-    counters fold into the fingerprint long.
-
-    ``portable=True`` derives bit b from a per-bit universal hash of the
-    polynomial shingle hash (``((x*(2b+1) + b*7919 + 3) % 2^31-1) % 2``)
-    instead of xxhash64's bit b — identical arithmetic runs in DuckDB,
-    making the operator oracle-checkable (use bits ≤ 32 there so the
-    fingerprint stays non-negative in BIGINT)."""
-    sh = _shingles(text, portable=portable)
-    bs = F.sequence(F.lit(0), F.lit(bits - 1))
+    counters fold into the fingerprint long."""
+    sh = _shingles(text)
+    bs = F.sequence(F.lit(0), F.lit(_SIMHASH_BITS - 1))
     init = F.transform(bs, lambda b: F.lit(0).cast("long"))
-    if portable:
-        # large multipliers for the same reason as minhash_signature's
-        # portable family: 31-bit x × small odd a barely wraps the modulus,
-        # making bit parities correlate across b
-        bit_of = (
-            lambda x, b: (x * (F.lit(2654435761) + b * 40503) + b * 7919 + 3)
-            % F.lit(_P31) % 2 == 1
-        )
-    else:
-        bit_of = lambda x, b: (
-            F.call_function("shiftright", x, b.cast("int")).bitwiseAND(F.lit(1)) == 1
-        )
+    bit_of = (
+        lambda x, b: (x * (F.lit(2654435761) + b * 40503) + b * 7919 + 3)
+        % F.lit(_P31) % 2 == 1
+    )
     counters = F.aggregate(
         sh,
         init,
@@ -401,23 +369,17 @@ def simhash_near_dups(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    portable: bool = False,
     reliable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ max_hamming.
 
-    Scale path: block on 4 equal-width bit chunks (pigeonhole: any pair
-    within Hamming 3 shares at least one exact chunk) → equi-join per
-    chunk → verify with bit_count(xor).  ``portable=True`` uses the
-    32-bit polynomial-hash simhash (4 × 8-bit chunks) so the identical
-    pairs come out of the DuckDB oracle."""
-    bits = 32 if portable else 64
-    chunk_bits = bits // 4
+    Block on 4 × 8-bit chunks of the 32-bit fingerprint (pigeonhole:
+    any pair within Hamming 3 shares at least one exact chunk) →
+    equi-join per chunk → verify with bit_count(xor); the DuckDB oracle
+    runs the identical plan."""
+    chunk_bits = _SIMHASH_BITS // 4
     mask = (1 << chunk_bits) - 1
-    sig = docs.select(
-        F.col(id_col).alias("id"),
-        simhash(F.col(text_col), bits=bits, portable=portable).alias("sh"),
-    )
+    sig = docs.select(F.col(id_col).alias("id"), simhash(F.col(text_col)).alias("sh"))
     # the self-join's per-side pushed predicates defeat exchange reuse,
     # so without this the interpreted-HOF fingerprint pass runs once PER
     # SIDE; materialized it is 16 bytes/row and computed once (measured
@@ -529,9 +491,9 @@ def ngram_jaccard_pairs(
     Candidates come from shared-ngram inverted index (explode → self
     equi-join on the ngram hash), then |A∩B| is the join match count and
     |A∪B| = |A|+|B|-|A∩B| — set algebra, no per-pair array shipping.
-    ``hash_grams=True`` (the scale path) joins on xxhash64 of the gram —
-    8 bytes instead of strings; False keeps raw gram strings (portable
-    to SQL oracles).
+    ``hash_grams=True`` (the scale path) joins on :func:`word_gram_index`'s
+    8-byte gram hashes instead of strings; False keeps raw gram strings
+    (portable to SQL oracles).
 
     ``max_gram_doc_freq`` caps a gram's document frequency before the
     self-join: a stop-gram shared by d docs produces d·(d-1)/2 join rows,

@@ -55,13 +55,6 @@ def get_spark(
             # size via env; override per-job with shuffle_partitions=
             shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
 
-    # Token-array rows expand ~10-30x from parquet to in-memory arrays, so
-    # the default 128 MB scan split yields multi-GB per-task batches whose
-    # GC cost grows superlinearly (measured: the decode stage ran 4x faster
-    # at 16 MB splits on the SAME cores — scripts/profile_checksum.py).
-    # 32 MB keeps per-task memory bounded while staying coarse enough that
-    # a 100 TB table is ~3M tasks; override per-deployment via env.
-    max_part = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(32 * 1024 * 1024))
     open_cost = os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", str(1024 * 1024))
     state_provider = os.environ.get(
         "SPARK_GRAFT_STATE_PROVIDER",
@@ -78,7 +71,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.files.maxPartitionBytes", max_part)
+        # Token-array rows expand ~10-30x from parquet to in-memory
+        # arrays, so the default 128 MB scan split yields multi-GB
+        # per-task batches whose GC cost grows superlinearly (measured:
+        # the decode stage ran 4x faster at 16 MB splits on the SAME
+        # cores — scripts/profile_checksum.py).  32 MB keeps per-task
+        # memory bounded while staying coarse enough that a 100 TB table
+        # is ~3M tasks; override per job with extra_conf.
+        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", open_cost)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -12,15 +12,16 @@ Execution model — this is a STATELESS stream-static equi-join, a
 Structured Streaming surface the rest of the repo's streaming operators
 don't exercise (they are stateful: dedup state, session state, CEP
 state, upsert state).  No watermark and no state store are involved:
-each micro-batch computes signatures + band hashes MAP-SIDE for its
-churn-sized slice of documents and equi-joins the static banded index
-relation (Catalyst picks broadcast when the index fits, shuffled hash
-otherwise — at 100 TB the index side is a stored, bucket-partitioned
-table so the probe co-locates without reshuffling the index).  The
-verify step re-joins the static signature table on the matched id; the
-probe's own signature rides its band rows (churn-sized by definition —
-the fat-column budget the batch operator enforces corpus-wide doesn't
-bind on a micro-batch).
+each micro-batch computes signatures (the same Arrow kernel projection
+the batch operators materialize, ``dedup.minhash_sigs``) + band hashes
+MAP-SIDE for its churn-sized slice of documents and equi-joins the
+static banded index relation (Catalyst picks broadcast when the index
+fits, shuffled hash otherwise — at 100 TB the index side is a stored,
+bucket-partitioned table so the probe co-locates without reshuffling
+the index).  The verify step re-joins the static signature table on
+the matched id; the probe's own signature rides its band rows
+(churn-sized by definition — the fat-column budget the batch operator
+enforces corpus-wide doesn't bind on a micro-batch).
 
 Per-band duplicate candidates (a pair matching in k bands appears k
 times) are deduplicated INSIDE the exactly-once sink per micro-batch —
@@ -38,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import _band_explode, _banded_sigs, minhash_signature
+from ..operators.dedup import _band_explode, _banded_sigs, est_jaccard, minhash_sigs
 from .sink import ExactlyOnceParquetSink
 
 
@@ -51,7 +52,6 @@ def build_neardup_alert_stream(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.8,
-    portable: bool = False,
     reliable: bool = False,
 ) -> DataFrame:
     """Streaming (probe_id, index_id, est_jaccard) alerts: incoming
@@ -63,33 +63,26 @@ def build_neardup_alert_stream(
     May emit a pair once per matching band; the sink dedups per batch
     (see :class:`NeardupAlertSink`)."""
     sig_i, banded_i = _banded_sigs(
-        index_docs, id_col, text_col, num_hashes, bands, portable, reliable
+        index_docs, id_col, text_col, num_hashes, bands, reliable
     )
-    probe = stream_docs.select(
-        F.col(id_col).alias("probe_id"),
-        minhash_signature(F.col(text_col), num_hashes, portable=portable).alias(
-            "psig"
-        ),
+    probe = minhash_sigs(stream_docs, id_col, text_col, num_hashes).select(
+        F.col("id").alias("probe_id"), F.col("sig").alias("psig")
     )
     probe_bands = probe.select(
         "probe_id",
         "psig",
-        _band_explode(F.col("psig"), num_hashes, bands, portable).alias(
-            "band", "band_hash"
-        ),
+        _band_explode(F.col("psig"), num_hashes, bands).alias("band", "band_hash"),
     )
     cand = probe_bands.join(banded_i, ["band", "band_hash"]).where(
         F.col("probe_id") != F.col("id")
     )
     paired = cand.join(sig_i.withColumnRenamed("sig", "isig"), "id")
-    est = (
-        F.size(
-            F.filter(F.zip_with("psig", "isig", lambda x, y: x == y), lambda m: m)
-        )
-        / F.lit(num_hashes)
-    ).alias("est_jaccard")
     return (
-        paired.select("probe_id", F.col("id").alias("index_id"), est)
+        paired.select(
+            "probe_id",
+            F.col("id").alias("index_id"),
+            est_jaccard("psig", "isig", num_hashes),
+        )
         .where(F.col("est_jaccard") >= threshold)
     )
 
@@ -114,7 +107,6 @@ def probe_index_batch(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.8,
-    portable: bool = False,
     reliable: bool = False,
 ) -> DataFrame:
     """Batch oracle form of the gate: the same probe over static
@@ -128,6 +120,5 @@ def probe_index_batch(
         num_hashes=num_hashes,
         bands=bands,
         threshold=threshold,
-        portable=portable,
         reliable=reliable,
     ).dropDuplicates(["probe_id", "index_id"])

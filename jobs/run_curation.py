@@ -131,7 +131,7 @@ def curate(docs, a: argparse.Namespace):
             docs.withColumn("_fp", TX.fingerprint_md5(F.col("text"))), "_fp", ["doc_id"]
         ).drop("_fp")
     if a.near_dedup is not None:
-        # fuzzy dedup: banded-LSH candidate pairs (xxhash64 scale path)
+        # fuzzy dedup: banded-LSH candidate pairs (Arrow-kernel signatures)
         # → pointer-jumping connected components over the PAIR set →
         # anti-join the non-canonical cluster members out.  Losers per
         # cluster = all but the min doc_id, so the result is

@@ -316,7 +316,7 @@ def test_incremental_minhash_equals_filtered_full(spark):
     changed = spark.createDataFrame([(2,), (3,)], "doc_id int")
     full = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in DD.minhash_lsh_pairs(docs, threshold=0.4, portable=True).collect()
+        for r in DD.minhash_lsh_pairs(docs, threshold=0.4).collect()
     }
     expected = {
         p: v for p, v in full.items() if p[0] in (2, 3) or p[1] in (2, 3)
@@ -324,7 +324,7 @@ def test_incremental_minhash_equals_filtered_full(spark):
     got = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
         for r in DD.incremental_minhash_pairs(
-            docs, changed, threshold=0.4, portable=True
+            docs, changed, threshold=0.4
         ).collect()
     }
     assert got == expected

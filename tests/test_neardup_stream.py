@@ -20,17 +20,19 @@ _BASE = "the quick brown fox jumps over the lazy dog while spark shuffles narrow
 def _index_docs(spark):
     rows = [(i, _BASE * 3 + f"indexed document number {i} " * 2) for i in range(8)]
     rows += [(i, f"totally unrelated corpus entry {i} about catalyst optimizer internals " * 4) for i in range(8, 12)]
+    rows += [(12, "")]  # empty doc: its signature must not match a NULL probe
     return spark.createDataFrame(rows, SCHEMA)
 
 
 def _probe_rows():
     # 100/101 near-dup indexed docs 0/1; 102 near-dups the unrelated 8;
-    # 103-105 fresh content with no indexed neighbor
+    # 103-105 fresh content with no indexed neighbor; 106 NULL text
     return (
         [(100, _BASE * 3 + "indexed document number 0 " * 2 + "tail")]
         + [(101, _BASE * 3 + "indexed document number 1 " * 2)]
         + [(102, "totally unrelated corpus entry 8 about catalyst optimizer internals " * 4 + "!")]
         + [(103 + i, f"genuinely novel probe text {i} with nothing shared at all " * 3) for i in range(3)]
+        + [(106, None)]
     )
 
 
@@ -93,6 +95,7 @@ def test_stream_gate_matches_batch_twin(spark, tmp_path):
     assert got == expected
     assert any(p == 100 and i == 0 for p, i in got)  # near-dup caught
     assert all(p not in (103, 104, 105) for p, _ in got)  # novel docs pass
+    assert all(p != 106 and i != 12 for p, i in got)  # NULL probe, "" index doc
 
 
 def test_stream_gate_resume_is_exactly_once(spark, tmp_path):

@@ -219,10 +219,10 @@ def test_adjacent_pair_counts_kernel(spark, sf_dir):
     assert _rows(fast, ["l", "r", "cnt"]) == _rows(slow, ["l", "r", "cnt"])
 
 
-def test_ensure_parallel_adaptive():
+def test_ensure_parallel_adaptive(spark):
     from bitquery_kafka_streams_rust_spark.datagen import table_meta
 
-    rows, parts = table_meta("/root/testdata/sf0.001", "documents")
+    rows, parts = table_meta(spark, "/root/testdata/sf0.001", "documents")
     assert rows > 0 and parts >= 1
 
 
@@ -232,12 +232,60 @@ def test_minhash_sig_kernel_matches_interpreted(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     slow = docs.select(
         F.col("doc_id").alias("id"),
-        DD.minhash_signature(F.col("text"), 64, portable=True).alias("sig"),
+        DD.minhash_signature(F.col("text"), 64).alias("sig"),
     )
-    sig, _banded = DD._banded_sigs(docs, "doc_id", "text", 64, 16, True, False)
+    sig, _banded = DD._banded_sigs(docs, "doc_id", "text", 64, 16, False)
     a = sorted((r["id"], tuple(r["sig"])) for r in slow.collect())
     b = sorted((r["id"], tuple(r["sig"])) for r in sig.collect())
     assert a == b
+
+
+def _py_minhash(text, num_hashes, k=5, base=313, mod=2**31 - 1, prime=4294967311):
+    """Per-row reference: distinct char k-shingle Horner hashes (one
+    whole-string shingle below k chars), min of each permutation."""
+    if text is None:
+        return None
+
+    def horner(cs):
+        h = 0
+        for c in cs:
+            h = (h * base + ord(c)) % mod
+        return h
+
+    sh = {horner(text)} if len(text) < k else {
+        horner(text[i:i + k]) for i in range(len(text) - k + 1)
+    }
+    return [
+        min((x * (2654435761 + 40503 * j) + 7919 * j + 7) % prime for x in sh)
+        for j in range(num_hashes)
+    ]
+
+
+def test_minhash_sig_kernel_null_rows_and_layouts():
+    """NULL text gets a NULL sig (never the empty string's), wherever
+    it sits in the batch; "" next to NULL, zero-row, sliced and
+    non-ASCII batches all match the per-row reference."""
+    import pyarrow as pa
+
+    cases = [
+        [None, "the quick brown fox", "", "abc"],           # NULL first
+        ["jumps over", None, "", None, "lazy dog again"],   # middle, "" beside
+        ["hello world", "", "héllo wörld", None],           # last; non-ASCII
+        [None],
+        [],
+    ]
+    batches = []
+    for texts in cases:
+        ids = pa.array(range(len(texts)), pa.int64())
+        batches.append(pa.record_batch(
+            [ids, pa.array(texts, pa.string())], names=["id", "text"]))
+    batches.append(batches[1].slice(1, 3))   # sliced: [None, "", None]
+    batches.append(batches[0].slice(2, 0))   # sliced to zero rows
+    for batch in batches:
+        (out,) = list(SKN.minhash_sig_kernel(8)(iter([batch])))
+        texts = batch.column("text").to_pylist()
+        assert out.column("id").to_pylist() == batch.column("id").to_pylist()
+        assert out.column("sig").to_pylist() == [_py_minhash(t, 8) for t in texts]
 
 
 def test_segment_reduce_trailing_empty_segments():

@@ -6,16 +6,11 @@ cell values after canonical ordering.  Usage:
 
     python tools/verify_oracle.py [sf_dir] [query ...]
 
-Every sweep also appends one line per query to BENCH/query_times.jsonl
-({sweep, sf_dir, query, spark_s, rows, partial}) — the per-query timing
-history that makes a silent 10x regression in any of the 90+ non-headline
-queries falsifiable round-over-round (bench.py renders the biggest
-movers between the last two full sweeps into BENCH/BASELINE.md).
+Each result line carries the query's wall time; nothing is written.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
@@ -23,19 +18,9 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-_TIMES_PATH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                           "BENCH", "query_times.jsonl")
-
-
-def record_times(rows: list[dict]) -> None:
-    os.makedirs(os.path.dirname(_TIMES_PATH), exist_ok=True)
-    with open(_TIMES_PATH, "a") as f:
-        for r in rows:
-            f.write(json.dumps(r, sort_keys=True) + "\n")
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -88,8 +73,6 @@ def main() -> int:
         print(f"ERROR: unknown query names in selection: {sorted(unknown)}")
         return 2
     failures = []
-    sweep = time.strftime("%Y-%m-%dT%H:%M:%S")
-    timing_rows: list[dict] = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -100,14 +83,6 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: spark error: {str(e)[:500]}")
             continue
-        timing_rows.append({
-            "sweep": sweep,
-            "sf_dir": sf_dir,
-            "query": name,
-            "spark_s": round(time.time() - t0, 2),
-            "rows": int(len(sdf)),
-            "partial": bool(only),
-        })
         sql = oracles.get(name)
         if sql is None:
             print(f"SKIP {name}: no oracle ({len(sdf)} rows, {time.time()-t0:.1f}s)")
@@ -150,7 +125,6 @@ def main() -> int:
         print(f"{status} {name} ({len(s)} rows, {time.time()-t0:.1f}s) {why}")
 
     spark.stop()
-    record_times(timing_rows)
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
     return 1 if failures else 0
 
