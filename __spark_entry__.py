@@ -2073,16 +2073,16 @@ def _q_seq_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts: same polynomial gram hash, same per-doc distinct, same
     membership test (searchsorted == semi-join on g)."""
     num_c = F.col("_c")
-    ev_scalars = SKN.spine_scalars(spark, sf_dir, num_c % 97 == 0)
+    ev_scalars = datagen.spine_scalars(spark, sf_dir, num_c % 97 == 0)
     ev_g = ev_scalars.select("doc_id", "_c", "n_tok").mapInArrow(
-        SKN.distinct_grams_kernel(n=8, from_gen=True), "g long"
+        SKN.distinct_grams_kernel(n=8), "g long"
     )
     import numpy as np
 
     ev_set = np.unique(ev_g.toArrow().column("g").to_numpy(zero_copy_only=False))
-    corpus = SKN.spine_scalars(spark, sf_dir, num_c % 97 != 0)
+    corpus = datagen.spine_scalars(spark, sf_dir, num_c % 97 != 0)
     hits = corpus.select("doc_id", "_c", "n_tok").mapInArrow(
-        SKN.shared_gram_count_kernel(ev_set, n=8, from_gen=True),
+        SKN.shared_gram_count_kernel(ev_set, n=8),
         "doc_id string, n_shared long",
     )
     # duplicate-aliased spine rows emit identical (doc_id, n_shared)
@@ -2141,13 +2141,13 @@ def _q_seq_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token stream generated inside the task (nothing fat crosses any
     # boundary).
     num_c = F.col("_c")
-    ev_grams = SKN.spine_scalars(spark, sf_dir, num_c % 97 == 0).select(
+    ev_grams = datagen.spine_scalars(spark, sf_dir, num_c % 97 == 0).select(
         "doc_id", "_c", "n_tok"
-    ).mapInArrow(SKN.distinct_grams_kernel(n=8, from_gen=True), "g long")
+    ).mapInArrow(SKN.distinct_grams_kernel(n=8), "g long")
     words = DD.bloom_words(ev_grams, m_bits=1 << 16, k=4)
-    corpus = SKN.spine_scalars(spark, sf_dir, num_c % 97 != 0)
+    corpus = datagen.spine_scalars(spark, sf_dir, num_c % 97 != 0)
     out = corpus.select("doc_id", "_c", "n_tok").mapInArrow(
-        SKN.bloom_hits_kernel(words, 1 << 16, 4, n=8, from_gen=True),
+        SKN.bloom_hits_kernel(words, 1 << 16, 4, n=8),
         "doc_id string, n_hits int",
     ).where(F.col("n_hits") >= 16)
     # duplicate-aliased rows produce identical (doc_id, n_hits) pairs
@@ -2482,7 +2482,7 @@ def _q_seq_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (count DESC, gram ASC) tie-break.  The CSV rendering
     applies to the 200-row result only."""
     grams = datagen.exploded_packed_grams(
-        SKN.spine_scalars(spark, sf_dir), 3
+        datagen.spine_scalars(spark, sf_dir), 3
     )
     return NG.ngram_stats(grams, 3, min_count=2, top_k=200)
 
@@ -2511,7 +2511,7 @@ def _q_seq_ngram_continuations(spark: SparkSession, sf_dir: str) -> DataFrame:
     output bounded at any SF by a deterministic (prefix_total DESC,
     prefix, rank) TakeOrdered cut.  Packed prefix keys cross the
     exchange (see seq_ngram_stats)."""
-    pairs = datagen.exploded_packed_prefix(SKN.spine_scalars(spark, sf_dir), 3)
+    pairs = datagen.exploded_packed_prefix(datagen.spine_scalars(spark, sf_dir), 3)
     return NG.ngram_continuations(
         pairs, 3, k=3, min_prefix_count=8, limit_rows=1500
     )
@@ -2555,9 +2555,9 @@ def _q_seq_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # c; doc_id == 'doc'||c reconstructs post-aggregate.  The vocab
     # count comes from the kernel's in-task distinct (vocab-bounded rows
     # per batch) instead of a corpus-sized one-token explode.
-    pairs = datagen.exploded_packed_prefix(SKN.spine_scalars(spark, sf_dir), 3)
+    pairs = datagen.exploded_packed_prefix(datagen.spine_scalars(spark, sf_dir), 3)
     vocab = (
-        SKN.spine_scalars(spark, sf_dir).select("_c", "n_tok")
+        datagen.spine_scalars(spark, sf_dir).select("_c", "n_tok")
         .mapInArrow(SKN.distinct_tokens_kernel(), "t int")
         .distinct()
         .count()
@@ -2675,7 +2675,7 @@ def _q_seq_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explodes (see seq_ngram_stats rationale)
     def hist(pred):
         return (
-            SKN.spine_scalars(spark, sf_dir, pred).select("_c", "n_tok")
+            datagen.spine_scalars(spark, sf_dir, pred).select("_c", "n_tok")
             .mapInArrow(SKN.token_counts_kernel(), "t int, cnt long")
             .groupBy("t")
             .agg(F.sum("cnt").alias("n"))
@@ -2721,7 +2721,7 @@ def _q_seq_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel-built (c, pos, g) positions + packed aggregation (guide
     # §2.3/§4.2): int keys through the frequency/join exchanges, doc_id
     # reconstructed on the bounded output
-    spine = SKN.spine_scalars(spark, sf_dir)
+    spine = datagen.spine_scalars(spark, sf_dir)
     pos = datagen.exploded_gram_positions(spine, 8)
     lens = spine.groupBy(F.col("_c").alias("c")).agg(F.max("n_tok").alias("n_tok"))
     return SP.dup_span_stats_packed(pos, lens, n=8, min_docs=2)
@@ -2782,7 +2782,7 @@ def _q_seq_dup_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # scalar-spine form: dedup/semi/anti splits on scalars, gram
     # positions + token explosion + untouched checksum in Arrow kernels
-    return SP.dup_span_trim_packed(SKN.spine_scalars(spark, sf_dir), n=8, min_docs=2)
+    return SP.dup_span_trim_packed(datagen.spine_scalars(spark, sf_dir), n=8, min_docs=2)
 
 
 _SQL_SEQ_DUP_TRIM = (
@@ -3007,7 +3007,7 @@ def _q_seq_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dropDuplicates shuffled whole token arrays — an invariant leak);
     # gram hashing runs in the Arrow kernel, emitting narrow (_b, g)
     # position rows straight into the same aggregation stack
-    spine = SKN.spine_scalars(spark, sf_dir).dropDuplicates(["doc_id"])
+    spine = datagen.spine_scalars(spark, sf_dir).dropDuplicates(["doc_id"])
     g = datagen.exploded_gram_positions(spine, 8).select(
         (F.col("c") % 5).cast("long").alias("_b"), "g"
     )
@@ -5828,7 +5828,7 @@ def _q_seq_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence; top-k cuts on the ROUNDED pmi with (tok_a, tok_b)
     tie-break."""
     # packed bigram keys + in-task unigram partial-combine
-    spine = SKN.spine_scalars(spark, sf_dir)
+    spine = datagen.spine_scalars(spark, sf_dir)
     bigrams = datagen.exploded_packed_grams(spine, 2)
     uni = (
         spine.select("_c", "n_tok")
@@ -6208,7 +6208,7 @@ def _q_seq_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parity-pinned against chunk_table): one vectorized pass replaces
     # the ~12 interpreted HOF walks per row, and the boundary carries
     # only chunk-sized rows (guide §4.2)
-    ch = SKN.spine_scalars(spark, sf_dir).select("doc_id", "_c", "n_tok").mapInArrow(
+    ch = datagen.spine_scalars(spark, sf_dir).select("doc_id", "_c", "n_tok").mapInArrow(
         SKN.cdc_chunk_kernel(w=8, boundary_bits=5),
         "doc_id string, chunk_idx int, start int, chunk_len int, chunk_hash long",
     )
@@ -6887,7 +6887,7 @@ def _q_seq_nucleus_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     allpairs_prefix), crossing token included.  Same narrow
     (prefix, next) exchange as the continuation table; windows are
     prefix-partitioned; TakeOrdered bounds output at any SF."""
-    pairs = datagen.exploded_packed_prefix(SKN.spine_scalars(spark, sf_dir), 3)
+    pairs = datagen.exploded_packed_prefix(datagen.spine_scalars(spark, sf_dir), 3)
     return NG.nucleus_sets(
         pairs, 3, p_num=9, p_den=10, min_prefix_count=8, limit_rows=1500
     )

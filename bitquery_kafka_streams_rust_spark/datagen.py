@@ -5,9 +5,12 @@ sequences ``(doc_id string, tokens array<int32>, n_tok int32,
 source string)`` + event-time ``ts``.  The sandbox testdata has no such
 table, so we derive one *deterministically* from the driver-generated
 ``documents`` parquet using pure integer arithmetic — the identical
-formula is expressible in DuckDB SQL (see ``__spark_entry__.py
-SEQUENCES_CTE``), which makes every sequence-pipeline query
-oracle-checkable end to end.
+formula is expressible in DuckDB SQL (the ``_SEQ`` CTE in
+``__spark_entry__.py``), which makes every sequence-pipeline query
+oracle-checkable end to end.  The derivation lives in one place:
+:func:`fixture_columns` (canon id -> doc_id, n_tok, source, ts) and
+:func:`gen_token_at` (token value at a position); every view here
+calls them, and ``seqkernel``'s NumPy generator is their one twin.
 
 Generator properties (mirrors FIXTURES.md §1):
 - ~1% exact duplicates: doc ids ending in 99 alias the previous id and
@@ -34,17 +37,81 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import VOCAB_SIZE
+from .schemas import K1, K2, MAX_TOK, VOCAB_SIZE
 
-K1 = 2654435761  # Knuth multiplicative hash constants
-K2 = 2246822519
-MAX_TOK = 2048
 EPOCH = "2024-01-01 00:00:00"
 
 
 def canon_id(doc_id):
     """Duplicate-aliasing: ids ≡ 99 (mod 100) replay the previous doc."""
     return F.when(doc_id % 100 == 99, doc_id - 1).otherwise(doc_id)
+
+
+def fixture_columns(c, day=None):
+    """(doc_id, n_tok, source, ts) of canon id ``c`` as unaliased
+    Columns — the fixture's scalar derivation, spelled once (the ``_SEQ``
+    oracle CTE spells the same arithmetic in DuckDB).  ``day``, for
+    replicated spines, is a per-replica offset in seconds; the clock
+    then runs on the replica-local id ``c % 10^7``."""
+    source = (
+        F.when(c % 10 < 6, "pumpfun")
+        .when(c % 10 == 6, "raydium")
+        .when(c % 10 == 7, "orca")
+        .when(c % 10 == 8, "meteora")
+        .otherwise("phoenix")
+    )
+    n_tok = (c * F.lit(40503) % F.lit(MAX_TOK)).cast("int")
+    # ts: monotone seconds after EPOCH; every 20th row late by 1-4 min.
+    # Lateness is capped BELOW the 300 s watermark delay so an
+    # arrival-ordered stream never silently drops fixture rows (the
+    # dedicated late-drop test crafts its own beyond-watermark rows).
+    # Derived from the CANON id so a duplicate row is bit-identical to its
+    # original — the dedup winner is then content-invariant (restart-identical
+    # output regardless of which copy the state store admits first).
+    late = F.when(c % 20 == 0, (F.lit(1) + (c / 20).cast("long") % 4) * 60).otherwise(F.lit(0))
+    clock = c % 86400 if day is None else day + (c % 10_000_000) % 86400
+    ts = F.to_timestamp(F.lit(EPOCH)) + F.make_interval(secs=clock - late)
+    return F.concat(F.lit("doc"), c.cast("string")), n_tok, source, ts
+
+
+def gen_token_at(c, pos0):
+    """Token value of canon doc ``c`` at 0-based position ``pos0`` — the
+    generator's one Catalyst formula (``seqkernel._gen_tokens`` is its
+    NumPy twin)."""
+    return (c * F.lit(K1) + pos0.cast("long") * F.lit(K2)) % F.lit(VOCAB_SIZE)
+
+
+def _sequences(spine: DataFrame, c, day=None, token_c=None) -> DataFrame:
+    """SEQUENCES-shaped select over a doc spine: the scalar columns of
+    :func:`fixture_columns` plus the generated ``tokens`` array (from
+    ``token_c``, default ``c``)."""
+    doc_id, n_tok, source, ts = fixture_columns(c, day)
+    tc = c if token_c is None else token_c
+    tokens = F.when(n_tok == 0, F.array().cast("array<int>")).otherwise(
+        F.transform(F.sequence(F.lit(0), n_tok - 1), lambda i: gen_token_at(tc, i).cast("int"))
+    )
+    return spine.select(
+        doc_id.alias("doc_id"),
+        tokens.alias("tokens"),
+        n_tok.alias("n_tok"),
+        source.alias("source"),
+        ts.alias("ts"),
+    )
+
+
+def _doc_spine(spark: SparkSession, sf_dir: str, max_parallelism: int | None,
+               rows_per_task: int) -> DataFrame:
+    """The ``documents`` doc_id column, spread by :func:`ensure_parallel`
+    BEFORE any derivation so fat derived columns never ride the
+    exchange."""
+    rows, parts = table_meta(spark, sf_dir, "documents") if max_parallelism else (None, None)
+    return ensure_parallel(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id"),
+        max_parallelism,
+        n_rows=rows,
+        rows_per_task=rows_per_task,
+        scan_partitions=parts,
+    )
 
 
 def ensure_parallel(
@@ -126,110 +193,58 @@ def sequences_view(
     ride the exchange).
     """
     # ~1.5M tokens of interpreted HOF work per task (rows_per_task=1500)
-    rows, parts = table_meta(spark, sf_dir, "documents") if min_parallelism else (None, None)
-    docs = ensure_parallel(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id"),
-        min_parallelism,
-        n_rows=rows,
-        rows_per_task=1500,
-        scan_partitions=parts,
-    )
+    docs = _doc_spine(spark, sf_dir, min_parallelism, 1500)
     # bound reference, NOT F.col("doc_id"): the output column is also named
     # doc_id and Spark's lateral-column-alias resolution would shadow the input
-    d = docs["doc_id"]
-    c = canon_id(d)
-    source = (
-        F.when(c % 10 < 6, "pumpfun")
-        .when(c % 10 == 6, "raydium")
-        .when(c % 10 == 7, "orca")
-        .when(c % 10 == 8, "meteora")
-        .otherwise("phoenix")
-    )
-    n_tok = (c * F.lit(40503) % F.lit(MAX_TOK)).cast("int")
-    # ts: monotone seconds after EPOCH; every 20th row late by 1-4 min.
-    # Lateness is capped BELOW the 300 s watermark delay so an
-    # arrival-ordered stream never silently drops fixture rows (the
-    # dedicated late-drop test crafts its own beyond-watermark rows).
-    # Derived from the CANON id so a duplicate row is bit-identical to its
-    # original — the dedup winner is then content-invariant (restart-identical
-    # output regardless of which copy the state store admits first).
-    late = F.when(c % 20 == 0, (F.lit(1) + (c / 20).cast("long") % 4) * 60).otherwise(F.lit(0))
-    ts = F.to_timestamp(F.lit(EPOCH)) + F.make_interval(secs=(c % 86400) - late)
-    tokens = F.when(
-        n_tok == 0, F.array().cast("array<int>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n_tok - 1),
-            lambda i: ((c * F.lit(K1) + i.cast("long") * F.lit(K2)) % F.lit(VOCAB_SIZE)).cast("int"),
-        )
-    )
-    return docs.select(
-        F.concat(F.lit("doc"), c.cast("string")).alias("doc_id"),
-        tokens.alias("tokens"),
+    return _sequences(docs, canon_id(docs["doc_id"]))
+
+
+def spine_scalars(spark: SparkSession, sf_dir: str, prefilter=None) -> DataFrame:
+    """The scalar spine frame (doc_id, n_tok, source, ts, _c) the
+    generator-fused kernels read; ``_c`` is the canon id the token
+    formula derives from.  ``prefilter`` (over these columns) applies
+    before any kernel so pruned rows cost nothing (guide §4.1).  The
+    spine is adaptively repartitioned (:func:`ensure_parallel`) so the
+    kernels parallelize even off a one-row-group testdata file."""
+    # ~20M generated tokens per NumPy task
+    docs = _doc_spine(spark, sf_dir, spark.sparkContext.defaultParallelism, 20_000)
+    c = canon_id(docs["doc_id"])
+    doc_id, n_tok, source, ts = fixture_columns(c)
+    out = docs.select(
+        doc_id.alias("doc_id"),
         n_tok.alias("n_tok"),
         source.alias("source"),
         ts.alias("ts"),
+        c.alias("_c"),
     )
-
-
-def sequences_spine(spark: SparkSession, sf_dir: str, replicas: int = 1) -> DataFrame:
-    """Bench-scale sequences: the same deterministic derivation over a
-    replicated doc spine (replica r offsets ids by r*10^7, so content
-    stays reproducible at any volume — the small-scale stand-in for the
-    10^12-row table).  Pure Catalyst: explode(sequence()) replication,
-    no driver loops."""
-    if replicas == 1:
-        return sequences_view(spark, sf_dir)
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    return _spine_from_range(spark, n_docs, replicas, num_partitions=None)
+    if prefilter is not None:
+        out = out.where(prefilter)
+    return out
 
 
 def _spine_from_range(
     spark: SparkSession, n_docs: int, replicas: int, num_partitions: int | None
 ) -> DataFrame:
-    """Replica-major spine via spark.range — no read, no shuffle; ids are
-    contiguous per partition so downstream per-replica batching needs no
-    repartition either."""
+    """Replica-major spine via spark.range (replica r offsets ids by
+    r*10^7, so content stays reproducible at any volume) — no read, no
+    shuffle; ids are contiguous per partition so downstream per-replica
+    batching needs no repartition either."""
     nparts = num_partitions or max(replicas, 8)
     base = spark.range(0, replicas * n_docs, 1, nparts)
     rep = base.select(
         ((base["id"] / n_docs).cast("long") * 10_000_000 + base["id"] % n_docs).alias("doc_id")
     )
-    d = rep["doc_id"]
-    c = canon_id(d)
-    source = (
-        F.when(c % 10 < 6, "pumpfun")
-        .when(c % 10 == 6, "raydium")
-        .when(c % 10 == 7, "orca")
-        .when(c % 10 == 8, "meteora")
-        .otherwise("phoenix")
-    )
-    n_tok = (c * F.lit(40503) % F.lit(MAX_TOK)).cast("int")
-    late = F.when(c % 20 == 0, (F.lit(1) + (c / 20).cast("long") % 4) * 60).otherwise(F.lit(0))
+    c = canon_id(rep["doc_id"])
     # each replica occupies its own day: event time is monotone across
     # replicas (hence across batch files), so the only out-of-order rows
     # are the injected ≤4-minute-late ones — no fixture row ever falls
     # behind the 300 s watermark regardless of epoch granularity
     day = (c / 10_000_000).cast("long") * 86400
-    ts = F.to_timestamp(F.lit(EPOCH)) + F.make_interval(secs=day + (c % 10_000_000) % 86400 - late)
     # mask c to 2^31 before the K1 multiply: at >214 replicas c exceeds
     # 2^31 and c*K1 would overflow int64 under ANSI (identity below
     # 2^31, so replica counts <= 214 — incl. the default 120 — generate
     # bit-identical spines to the unmasked arithmetic)
-    cm = c % F.lit(2**31)
-    tokens = F.when(n_tok == 0, F.array().cast("array<int>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n_tok - 1),
-            lambda i: ((cm * F.lit(K1) + i.cast("long") * F.lit(K2)) % F.lit(VOCAB_SIZE)).cast("int"),
-        )
-    )
-    return rep.select(
-        F.concat(F.lit("doc"), c.cast("string")).alias("doc_id"),
-        tokens.alias("tokens"),
-        n_tok.alias("n_tok"),
-        source.alias("source"),
-        ts.alias("ts"),
-    )
+    return _sequences(rep, c, day=day, token_c=c % F.lit(2**31))
 
 
 def write_spine_batches(
@@ -284,19 +299,14 @@ def shards_view(
     duplicate-alias rows emit no shards (one shard set per doc_id), and
     shard ts is offset by shard_id minutes (join-window test).
     """
-    rows, parts = table_meta(spark, sf_dir, "documents") if min_parallelism else (None, None)
-    docs = ensure_parallel(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id"),
-        min_parallelism,
-        n_rows=rows,
-        rows_per_task=1500,
-        scan_partitions=parts,
-    )
+    docs = _doc_spine(spark, sf_dir, min_parallelism, 1500)
     d = docs["doc_id"]  # bound ref; see sequences_view
-    n_tok = (d * F.lit(40503) % F.lit(MAX_TOK)).cast("int")
+    # alias rows are dropped below, so d is its own canon id; shard ts
+    # runs on the clock without the injected lateness
+    doc_id, n_tok, _source, _ts = fixture_columns(d)
     ts = F.to_timestamp(F.lit(EPOCH)) + F.make_interval(secs=d % 86400)
     base = docs.where((d % 100 != 99) & (d % 10 != 7)).select(
-        F.concat(F.lit("doc"), d.cast("string")).alias("doc_id"),
+        doc_id.alias("doc_id"),
         d.alias("_c"),
         n_tok.alias("n_tok"),
         ts.alias("ts"),
@@ -316,8 +326,7 @@ def shards_view(
     c = F.col("_c")
     tokens_part = F.when(m <= 0, F.array().cast("array<int>")).otherwise(
         F.transform(
-            F.sequence(start, start + m - 1),
-            lambda i: ((c * F.lit(K1) + i.cast("long") * F.lit(K2)) % F.lit(VOCAB_SIZE)).cast("int"),
+            F.sequence(start, start + m - 1), lambda i: gen_token_at(c, i).cast("int")
         )
     )
     return base.select(
@@ -360,7 +369,7 @@ def write_sequence_batches(
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     c = canon_id(docs["doc_id"])
     arrivals = docs.select(
-        F.concat(F.lit("doc"), c.cast("string")).alias("doc_id"),
+        fixture_columns(c)[0].alias("doc_id"),
         (c % 86400).alias("_arrival"),
         docs["doc_id"].alias("_raw"),
     )
@@ -552,14 +561,8 @@ def token_blocks_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 # interpreted transform+posexplode chain at sf0.1).  Kernels stay the
 # right tool for per-row REDUCTIONS (checksums, hit counts) and for
 # real stored token arrays; these builders are the generator-fused
-# explosion twins.  All arithmetic is term-for-term the sequences_view
-# formula, so values are bit-identical.
-
-
-def gen_token_at(c, pos0):
-    """Token value of canon doc ``c`` at 0-based position ``pos0`` —
-    the scalar form of the sequences_view element formula."""
-    return (c * F.lit(K1) + pos0.cast("long") * F.lit(K2)) % F.lit(VOCAB_SIZE)
+# explosion twins.  Every token comes from gen_token_at, so values are
+# bit-identical to sequences_view.
 
 
 def exploded_token_positions(spine: DataFrame) -> DataFrame:
@@ -578,6 +581,26 @@ def exploded_token_positions(spine: DataFrame) -> DataFrame:
     )
 
 
+def _window_starts(spine: DataFrame, n: int) -> DataFrame:
+    """(c, pos): one row per 1-based start of a full ``n``-token window
+    of the scalar spine (docs shorter than ``n`` have none)."""
+    return spine.where(F.col("n_tok") >= n).select(
+        F.col("_c").alias("c"),
+        F.explode(F.sequence(F.lit(1).cast("int"), F.col("n_tok") - (n - 1))).alias("pos"),
+    )
+
+
+def _packed_key(m: int):
+    """The 16-bit-packed key of the ``m`` tokens starting at 1-based
+    ``pos`` of doc ``c``."""
+    c = F.col("c")
+    pos = F.col("pos")
+    p = F.lit(0).cast("long")
+    for k in range(m):
+        p = p * F.lit(1 << 16) + gen_token_at(c, pos + F.lit(k - 1))
+    return p
+
+
 def exploded_gram_positions(
     spine: DataFrame, n: int = 8, base: int = 313, mod: int = 2147483647
 ) -> DataFrame:
@@ -589,16 +612,7 @@ def exploded_gram_positions(
     g = F.lit(0).cast("long")
     for k in range(n):
         g = (g + gen_token_at(c, pos + F.lit(k - 1)) * F.lit(pow(base, n - 1 - k, mod))) % F.lit(mod)
-    return (
-        spine.where(F.col("n_tok") >= n)
-        .select(
-            F.col("_c").alias("c"),
-            F.explode(
-                F.sequence(F.lit(1).cast("int"), F.col("n_tok") - (n - 1))
-            ).alias("pos"),
-        )
-        .select("c", pos.cast("long").alias("pos"), g.alias("g"))
-    )
+    return _window_starts(spine, n).select("c", pos.cast("long").alias("pos"), g.alias("g"))
 
 
 def exploded_packed_grams(spine: DataFrame, n: int) -> DataFrame:
@@ -607,21 +621,7 @@ def exploded_packed_grams(spine: DataFrame, n: int) -> DataFrame:
     from .functions.seqkernel import check_packed_width
 
     check_packed_width(n)
-    c = F.col("c")
-    pos = F.col("pos")
-    g = F.lit(0).cast("long")
-    for k in range(n):
-        g = g * F.lit(1 << 16) + gen_token_at(c, pos + F.lit(k - 1))
-    return (
-        spine.where(F.col("n_tok") >= n)
-        .select(
-            F.col("_c").alias("c"),
-            F.explode(
-                F.sequence(F.lit(1).cast("int"), F.col("n_tok") - (n - 1))
-            ).alias("pos"),
-        )
-        .select("c", g.alias("g"))
-    )
+    return _window_starts(spine, n).select("c", _packed_key(n).alias("g"))
 
 
 def exploded_packed_prefix(spine: DataFrame, n: int) -> DataFrame:
@@ -630,19 +630,7 @@ def exploded_packed_prefix(spine: DataFrame, n: int) -> DataFrame:
     from .functions.seqkernel import check_packed_width
 
     check_packed_width(n - 1)
-    c = F.col("c")
-    pos = F.col("pos")
-    p = F.lit(0).cast("long")
-    for k in range(n - 1):
-        p = p * F.lit(1 << 16) + gen_token_at(c, pos + F.lit(k - 1))
-    nx = gen_token_at(c, pos + F.lit(n - 2)).cast("int")
-    return (
-        spine.where(F.col("n_tok") >= n)
-        .select(
-            F.col("_c").alias("c"),
-            F.explode(
-                F.sequence(F.lit(1).cast("int"), F.col("n_tok") - (n - 1))
-            ).alias("pos"),
-        )
-        .select("c", p.alias("p"), nx.alias("next_tok"))
+    nx = gen_token_at(F.col("c"), F.col("pos") + F.lit(n - 2)).cast("int")
+    return _window_starts(spine, n).select(
+        "c", _packed_key(n - 1).alias("p"), nx.alias("next_tok")
     )

@@ -17,11 +17,17 @@ Everything here is exact int64 arithmetic, bit-identical to the
 Catalyst expressions it replaces (and therefore to the DuckDB oracles):
 
 - segment sums stay in int64 (``np.add.reduceat``), never float;
-- the token generator replays ``datagen.sequences_view``'s formula
-  ``(c*K1 + i*K2) mod VOCAB`` term for term;
+- one token generator, ``_gen_tokens``, replays ``datagen.gen_token_at``
+  (``(c*K1 + i*K2) mod VOCAB``) term for term for a scalar spine batch
+  (``_c``, ``n_tok`` from ``datagen.spine_scalars``), and refuses canon
+  ids whose int64 sum could wrap;
 - the rolling gram hash replays ``dedup.token_gram_hashes``'s
   ``sum_k t_{i+k} * base^(n-1-k) mod P31`` with the same coefficient
   set (pre-reduced mod P31, products < 2^47: int64-safe).
+
+Token kernels read their input: a batch carrying a ``tokens`` column
+is decoded as real arrays, any other batch is generated from ``_c`` and
+``n_tok`` (``_batch_tokens``).
 
 Kernel functions are module-level (importable on executors — pandas /
 Arrow workers deserialize them by module reference; ``session.get_spark``
@@ -35,10 +41,8 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from ..schemas import VOCAB_SIZE
+from ..schemas import K1, K2, MAX_TOK, VOCAB_SIZE
 
-K1 = 2654435761
-K2 = 2246822519
 P31 = 2_147_483_647  # 2^31 - 1 (gram-hash modulus)
 M31 = 2**31          # checksum modulus
 
@@ -100,8 +104,43 @@ def _list_column(batch: pa.RecordBatch, name: str):
 
 
 # ---------------------------------------------------------------------------
-# token features from the deterministic generator (sequences_view fused)
+# the fixture token generator (sequences_view fused)
 # ---------------------------------------------------------------------------
+
+# largest canon id whose tokens stay exact in int64:
+# c*K1 + (MAX_TOK-1)*K2 < 2^63  <=>  c <= 3,474,699,811
+GEN_C_MAX = (2**63 - 1 - (MAX_TOK - 1) * K2) // K1
+
+
+def _gen_tokens(batch: pa.RecordBatch):
+    """The fixture token stream of a scalar spine batch (``_c``,
+    ``n_tok``), in ``_list_column``'s layout (no NULL rows).  The int64
+    sum wraps past ``GEN_C_MAX`` and NumPy floor-mods a negative ``c``
+    where Catalyst and DuckDB raise or keep the sign, so both are
+    refused rather than generated wrong."""
+    c = batch.column("_c").to_numpy(zero_copy_only=False).astype(np.int64)
+    n = batch.column("n_tok").to_numpy(zero_copy_only=False).astype(np.int64)
+    if c.size and (c.min() < 0 or c.max() > GEN_C_MAX or n.max() > MAX_TOK):
+        raise ValueError(
+            f"token generator needs 0 <= _c <= {GEN_C_MAX} and n_tok <= {MAX_TOK}"
+            f" (c*K1 + (n_tok-1)*K2 < 2^63); got _c in [{c.min()}, {c.max()}],"
+            f" n_tok <= {n.max()}"
+        )
+    rid, pos, starts = _flat_positions(n)
+    flat = (c[rid] * K1 + pos * K2) % VOCAB_SIZE
+    return flat, rid, pos, starts, n, None
+
+
+def _batch_tokens(batch: pa.RecordBatch):
+    """Uniform flat-token access for the token kernels: decode the
+    ``tokens`` list column when the batch carries one, else GENERATE the
+    stream from (_c, n_tok) — for spine-derived corpora the generation is
+    pure arithmetic, so fusing it into the kernel avoids both the
+    interpreted Catalyst generator and shipping ~4 KB/row of arrays
+    across the Arrow boundary (only two int64 scalars cross per row)."""
+    if "tokens" in batch.schema.names:
+        return _list_column(batch, "tokens")
+    return _gen_tokens(batch)
 
 
 def _features_from_flat(flat, pos, starts, n, want):
@@ -149,10 +188,7 @@ def gen_feature_kernel(want: tuple[str, ...]):
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            c = batch.column("_c").to_numpy(zero_copy_only=False).astype(np.int64)
-            n = batch.column("n_tok").to_numpy(zero_copy_only=False).astype(np.int64)
-            rid, pos, starts = _flat_positions(n)
-            flat = (c[rid] * K1 + pos * K2) % VOCAB_SIZE
+            flat, _rid, pos, starts, n, _nulls = _gen_tokens(batch)
             feats = _features_from_flat(flat, pos, starts, n, want)
             keep = [i for i, name in enumerate(batch.schema.names) if name != "_c"]
             arrays = [batch.column(i) for i in keep]
@@ -185,10 +221,12 @@ def sequence_features_view(spark, sf_dir: str,
     BEFORE the kernel (guide §4.1 — filter before the opaque op so
     pruned rows never pay for token generation).
     """
+    from .. import datagen
+
     bad = set(features) - set(FEATURES)
     if bad:
         raise ValueError(f"unknown features: {sorted(bad)}")
-    scalars = spine_scalars(spark, sf_dir, prefilter)
+    scalars = datagen.spine_scalars(spark, sf_dir, prefilter)
     types = {
         "cksum": "bigint",
         "tok_sum": "bigint",
@@ -250,80 +288,29 @@ VALID_EVENTS_SCHEMA = "doc_id string, n_tok int, source string, ts timestamp, ck
 # ---------------------------------------------------------------------------
 
 
-def _batch_tokens(batch: pa.RecordBatch, from_gen: bool):
-    """Uniform flat-token access for the gram kernels: either decode the
-    ``tokens`` list column, or GENERATE the stream from (_c, n_tok) —
-    for spine-derived corpora the generation is pure arithmetic, so
-    fusing it into the kernel avoids both the interpreted Catalyst
-    generator and shipping ~4 KB/row of arrays across the Arrow
-    boundary (only two int64 scalars cross per row)."""
-    if not from_gen:
-        return _list_column(batch, "tokens")
-    c = batch.column("_c").to_numpy(zero_copy_only=False).astype(np.int64)
-    n = batch.column("n_tok").to_numpy(zero_copy_only=False).astype(np.int64)
-    rid, pos, starts = _flat_positions(n)
-    flat = (c[rid] * K1 + pos * K2) % VOCAB_SIZE
-    return flat, rid, pos, starts, n, None
-
-
-def spine_scalars(spark, sf_dir: str, prefilter=None):
-    """The scalar spine frame (doc_id, n_tok, source, ts, _c) shared by
-    the generator-fused kernels; ``_c`` is the canon id the token
-    formula derives from.  ``prefilter`` (over these columns) applies
-    before any kernel so pruned rows cost nothing (guide §4.1).  The
-    spine is adaptively repartitioned (datagen.ensure_parallel) so the
-    kernels parallelize even off a one-row-group testdata file."""
-    from pyspark.sql import functions as F
-
-    from .. import datagen
-
-    rows, parts = datagen.table_meta(spark, sf_dir, "documents")
-    docs = datagen.ensure_parallel(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id"),
-        spark.sparkContext.defaultParallelism,
-        n_rows=rows,
-        rows_per_task=20_000,  # ~20M generated tokens per NumPy task
-        scan_partitions=parts,
-    )
-    d = docs["doc_id"]
-    c = datagen.canon_id(d)
-    source = (
-        F.when(c % 10 < 6, "pumpfun")
-        .when(c % 10 == 6, "raydium")
-        .when(c % 10 == 7, "orca")
-        .when(c % 10 == 8, "meteora")
-        .otherwise("phoenix")
-    )
-    n_tok = (c * F.lit(40503) % F.lit(datagen.MAX_TOK)).cast("int")
-    late = F.when(c % 20 == 0, (F.lit(1) + (c / 20).cast("long") % 4) * 60).otherwise(F.lit(0))
-    ts = F.to_timestamp(F.lit(datagen.EPOCH)) + F.make_interval(secs=(c % 86400) - late)
-    out = docs.select(
-        F.concat(F.lit("doc"), c.cast("string")).alias("doc_id"),
-        n_tok.alias("n_tok"),
-        source.alias("source"),
-        ts.alias("ts"),
-        c.alias("_c"),
-    )
-    if prefilter is not None:
-        out = out.where(prefilter)
-    return out
+def _window_hashes(flat: np.ndarray, win_idx: np.ndarray, n: int,
+                   base: int, mod: int) -> np.ndarray:
+    """Polynomial hash sum_k flat[i+k] * base^(n-1-k) mod ``mod`` of the
+    ``n`` values starting at each flat index ``i`` in ``win_idx``."""
+    acc = np.zeros(len(win_idx), dtype=np.int64)
+    for k in range(n):
+        acc = (acc + flat[win_idx + k] * pow(base, n - 1 - k, mod)) % mod
+    return acc
 
 
 def _flat_gram_hashes(flat: np.ndarray, rid: np.ndarray, pos: np.ndarray,
                       starts: np.ndarray, lengths: np.ndarray,
-                      n: int, base: int, mod: int):
+                      n: int, base: int, mod: int, empty_gram: bool = False):
     """Flat gram hashes: for every row, the polynomial hash of each
     length-``n`` window (rows shorter than n hash the whole array as one
-    gram; empty rows contribute nothing) — the NumPy twin of
-    ``dedup.token_gram_hashes`` pre-``array_distinct``.  Returns
-    (g, g_rid): hash values and their row ids."""
-    coeffs = [pow(base, n - 1 - k, mod) for k in range(n)]
+    gram; empty rows contribute nothing, or the empty fold 0 with
+    ``empty_gram``) — the NumPy twin of ``dedup.token_gram_hashes``
+    pre-``array_distinct``.  Returns (g, g_rid): hash values and their
+    row ids."""
     win_idx = np.flatnonzero(pos <= (lengths[rid] - n))  # full-window starts
-    acc = np.zeros(len(win_idx), dtype=np.int64)
-    for k, ck in enumerate(coeffs):
-        acc = (acc + flat[win_idx + k] * ck) % mod
+    acc = _window_hashes(flat, win_idx, n, base, mod)
     g_rid = rid[win_idx]
-    short = np.flatnonzero((lengths > 0) & (lengths < n))
+    short = np.flatnonzero(((lengths > 0) | empty_gram) & (lengths < n))
     if short.size:
         sh = np.zeros(short.size, dtype=np.int64)
         slen = lengths[short]
@@ -352,8 +339,7 @@ def _distinct_per_row(g: np.ndarray, rid: np.ndarray):
 
 
 def bloom_hits_kernel(words: list[int], m_bits: int, k: int,
-                      n: int = 8, base: int = 313, mod: int = P31,
-                      from_gen: bool = False):
+                      n: int = 8, base: int = 313, mod: int = P31):
     """mapInArrow kernel: (doc_id, tokens) -> (doc_id, n_hits) where
     ``n_hits`` counts the row's DISTINCT gram hashes whose ``k``
     Kirsch-Mitzenmacher Bloom probes all hit — the NumPy twin of
@@ -364,7 +350,7 @@ def bloom_hits_kernel(words: list[int], m_bits: int, k: int,
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
+            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch)
             g, grid = _flat_gram_hashes(flat, rid, pos, starts, lengths, n, base, mod)
             g, grid = _distinct_per_row(g, grid)
             h1 = (g * K1) % P31
@@ -383,8 +369,7 @@ def bloom_hits_kernel(words: list[int], m_bits: int, k: int,
 
 
 def shared_gram_count_kernel(eval_grams: np.ndarray, n: int = 8,
-                             base: int = 313, mod: int = P31,
-                             from_gen: bool = False):
+                             base: int = 313, mod: int = P31):
     """mapInArrow kernel: (doc_id, tokens) -> (doc_id, n_shared) where
     ``n_shared`` counts the row's distinct gram hashes present in the
     SORTED ``eval_grams`` set — the map-side membership form of
@@ -395,7 +380,7 @@ def shared_gram_count_kernel(eval_grams: np.ndarray, n: int = 8,
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
+            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch)
             g, grid = _flat_gram_hashes(flat, rid, pos, starts, lengths, n, base, mod)
             g, grid = _distinct_per_row(g, grid)
             if ev.size and g.size:
@@ -413,8 +398,7 @@ def shared_gram_count_kernel(eval_grams: np.ndarray, n: int = 8,
     return fn
 
 
-def distinct_grams_kernel(n: int = 8, base: int = 313, mod: int = P31,
-                          from_gen: bool = False):
+def distinct_grams_kernel(n: int = 8, base: int = 313, mod: int = P31):
     """mapInArrow kernel: (tokens) -> (g) — the batch-local-distinct gram
     hashes, exploded.  Used to build the eval-side gram set (small by
     construction: benchmarks, not the corpus); compose with
@@ -422,7 +406,7 @@ def distinct_grams_kernel(n: int = 8, base: int = 313, mod: int = P31,
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
+            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch)
             g, _grid = _flat_gram_hashes(flat, rid, pos, starts, lengths, n, base, mod)
             g = np.unique(g)
             yield pa.RecordBatch.from_arrays([pa.array(g, type=pa.int64())],
@@ -523,7 +507,7 @@ def packed_to_csv(col, n: int):
     return F.concat_ws(",", *parts)
 
 
-def distinct_tokens_kernel(from_gen: bool = True):
+def distinct_tokens_kernel():
     """mapInArrow kernel: batch -> batch-local DISTINCT token values
     (column ``t``).  Compose with ``.distinct()`` for the corpus vocab —
     bounded by VOCAB_SIZE rows per batch, replacing the corpus-sized
@@ -531,7 +515,7 @@ def distinct_tokens_kernel(from_gen: bool = True):
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
+            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(np.unique(flat), type=pa.int32())], names=["t"]
             )
@@ -539,7 +523,7 @@ def distinct_tokens_kernel(from_gen: bool = True):
     return fn
 
 
-def token_counts_kernel(from_gen: bool = True):
+def token_counts_kernel():
     """mapInArrow kernel: batch -> batch-local (t, cnt) token histogram
     (np.unique(return_counts) — vocab-bounded rows per batch).  Compose
     with groupBy(t).sum(cnt) for the exact corpus histogram: the
@@ -548,90 +532,12 @@ def token_counts_kernel(from_gen: bool = True):
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
+            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch)
             t, cnt = np.unique(flat, return_counts=True)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(t.astype(np.int32), type=pa.int32()),
                  pa.array(cnt.astype(np.int64), type=pa.int64())],
                 names=["t", "cnt"],
-            )
-
-    return fn
-
-
-def keyed_gram_hash_kernel(key_col: str, n: int = 8, base: int = 313,
-                           mod: int = P31, from_gen: bool = True,
-                           full_windows_only: bool = True):
-    """mapInArrow kernel: batch -> (key, g) one row per gram position,
-    ``g`` the rolling polynomial hash and ``key`` a passthrough column
-    (batch id, doc number, ...).  ``full_windows_only=True`` matches the
-    span/novelty convention (docs shorter than n emit nothing);
-    ``False`` adds the whole-array gram for short docs
-    (token_gram_hashes convention)."""
-
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
-            key = batch.column(key_col)
-            if full_windows_only:
-                win_idx = np.flatnonzero(pos <= (lengths[rid] - n))
-                coeffs = [pow(base, n - 1 - k, mod) for k in range(n)]
-                g = np.zeros(len(win_idx), dtype=np.int64)
-                for k, ck in enumerate(coeffs):
-                    g = (g + flat[win_idx + k] * ck) % mod
-                grid = rid[win_idx]
-            else:
-                g, grid = _flat_gram_hashes(flat, rid, pos, starts, lengths,
-                                            n, base, mod)
-            yield pa.RecordBatch.from_arrays(
-                [key.take(pa.array(grid, type=pa.int64())),
-                 pa.array(g, type=pa.int64())],
-                names=[key_col, "g"],
-            )
-
-    return fn
-
-
-def gram_positions_kernel(n: int = 8, base: int = 313, mod: int = P31,
-                          from_gen: bool = True):
-    """mapInArrow kernel: spine scalars -> (c, pos, g) one row per
-    full-window gram position (1-based pos) — the NumPy twin of
-    spans.gram_positions, with the canon doc NUMBER as the key (narrower
-    exchange than the doc_id string; doc_id == 'doc'+c reconstructs
-    post-aggregate)."""
-
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
-            c = batch.column("_c").to_numpy(zero_copy_only=False).astype(np.int64)
-            win_idx = np.flatnonzero(pos <= (lengths[rid] - n))
-            coeffs = [pow(base, n - 1 - k, mod) for k in range(n)]
-            g = np.zeros(len(win_idx), dtype=np.int64)
-            for k, ck in enumerate(coeffs):
-                g = (g + flat[win_idx + k] * ck) % mod
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c[rid[win_idx]], type=pa.int64()),
-                 pa.array(pos[win_idx] + 1, type=pa.int64()),
-                 pa.array(g, type=pa.int64())],
-                names=["c", "pos", "g"],
-            )
-
-    return fn
-
-
-def token_positions_kernel(from_gen: bool = True):
-    """mapInArrow kernel: spine scalars -> (c, pos, token) — the
-    posexplode twin for the span-trim path, generated in-task."""
-
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
-            c = batch.column("_c").to_numpy(zero_copy_only=False).astype(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c[rid], type=pa.int64()),
-                 pa.array(pos + 1, type=pa.int64()),
-                 pa.array(flat, type=pa.int64())],
-                names=["c", "pos", "token"],
             )
 
     return fn
@@ -645,10 +551,7 @@ def gen_cksum_mod_kernel(mod: int):
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            c = batch.column("_c").to_numpy(zero_copy_only=False).astype(np.int64)
-            n = batch.column("n_tok").to_numpy(zero_copy_only=False).astype(np.int64)
-            rid, pos, starts = _flat_positions(n)
-            flat = (c[rid] * K1 + pos * K2) % VOCAB_SIZE
+            flat, _rid, pos, starts, n, _nulls = _gen_tokens(batch)
             s = _segment_reduce(np.add, (pos + 1) * flat, starts, n, 0)
             s %= mod
             yield pa.RecordBatch.from_arrays(
@@ -706,8 +609,7 @@ def _cdc_avalanche(x: np.ndarray, stage_salt: int) -> np.ndarray:
 
 def cdc_chunk_kernel(w: int = 8, boundary_bits: int = 5,
                      base: int = 313, mod: int = P31,
-                     stage_salt: int = 13 * 0x9E3779B9,
-                     from_gen: bool = True):
+                     stage_salt: int = 13 * 0x9E3779B9):
     """mapInArrow kernel: spine scalars (or tokens) -> one row per
     content-defined chunk (doc_id, chunk_idx, start, chunk_len,
     chunk_hash) — the NumPy twin of cdchunk.chunk_table, term for term:
@@ -720,16 +622,12 @@ def cdc_chunk_kernel(w: int = 8, boundary_bits: int = 5,
 
     def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch, from_gen)
+            flat, rid, pos, starts, lengths, _nulls = _batch_tokens(batch)
             doc_id = batch.column("doc_id")
             n_rows = batch.num_rows
             # window hashes (start index i covers i..i+w-1), avalanched
             win_idx = np.flatnonzero(pos <= (lengths[rid] - w))
-            coeffs = [pow(base, w - 1 - k, mod) for k in range(w)]
-            hsh = np.zeros(len(win_idx), dtype=np.int64)
-            for k, ck in enumerate(coeffs):
-                hsh = (hsh + flat[win_idx + k] * ck) % mod
-            hsh = _cdc_avalanche(hsh, stage_salt)
+            hsh = _cdc_avalanche(_window_hashes(flat, win_idx, w, base, mod), stage_salt)
             # cut end-positions (1-based within row): p = pos_in_row + w
             is_cut = (hsh & mask) == 0
             cut_flat = win_idx[is_cut]
@@ -840,26 +738,10 @@ def minhash_sig_kernel(num_hashes: int = 64, k: int = 5,
             n_rows = batch.num_rows
             rid, pos, _ = _flat_positions(lengths)
             # shingle hashes: k-window poly for rows len>=k, whole-string
-            # Horner for 0<len<k (the _shingles convention; len==0 rows
-            # hash the empty fold = 0 via the short path: _shingles wraps
-            # text of length 0 as one whole-string gram too)
-            win_idx = np.flatnonzero(pos <= (lengths[rid] - k))
-            coeffs = [pow(base, k - 1 - j, mod) for j in range(k)]
-            g = np.zeros(len(win_idx), dtype=np.int64)
-            for j, cj in enumerate(coeffs):
-                g = (g + flat[win_idx + j] * cj) % mod
-            g_rid = rid[win_idx]
-            short = np.flatnonzero(lengths < k)
-            if short.size:
-                sh = np.zeros(short.size, dtype=np.int64)
-                slen = lengths[short]
-                sstart = starts[short]
-                mx = int(slen.max()) if short.size else 0
-                for j in range(mx):
-                    live = j < slen
-                    sh[live] = (sh[live] * base + flat[sstart[live] + j]) % mod
-                g = np.concatenate([g, sh])
-                g_rid = np.concatenate([g_rid, short])
+            # Horner for len<k (the _shingles convention: text of length
+            # 0 is one whole-string gram too, the empty fold 0)
+            g, g_rid = _flat_gram_hashes(flat, rid, pos, starts, lengths,
+                                         k, base, mod, empty_gram=True)
             # signatures: per permutation, min per row over its shingles
             order = np.argsort(g_rid, kind="stable")
             g_s = g[order]

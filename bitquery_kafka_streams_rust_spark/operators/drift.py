@@ -598,7 +598,7 @@ def token_drift_hist(
 def novelty_curve_grams(g: DataFrame) -> DataFrame:
     """``novelty_curve`` over a PRE-BUILT (_b, g) gram-position frame
     (one row per full-window gram position, per-doc-deduped upstream —
-    e.g. seqkernel.keyed_gram_hash_kernel over the deduped scalar
+    e.g. datagen.exploded_gram_positions over the deduped scalar
     spine).  Identical aggregation stack and output."""
     per_batch = g.groupBy("_b").agg(
         F.count("*").alias("n_pos"), F.countDistinct("g").alias("n_distinct")

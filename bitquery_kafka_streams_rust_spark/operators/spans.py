@@ -262,11 +262,12 @@ def dup_span_trim(
 # ---------------------------------------------------------------------------
 #
 # Same plans as above, but the gram-position table arrives from the
-# Arrow kernel (seqkernel.gram_positions_kernel) keyed by the canon doc
-# NUMBER ``c`` instead of the doc_id string: the frequency aggregate and
-# dup-position join exchange 8-byte ints (guide §2.3), the rolling hash
-# runs vectorized instead of k interpreted zip_with passes (guide §4.2),
-# and doc_id reconstructs as 'doc'+c on the bounded outputs.
+# codegen'd scalar builder (datagen.exploded_gram_positions) keyed by
+# the canon doc NUMBER ``c`` instead of the doc_id string: the frequency
+# aggregate and dup-position join exchange 8-byte ints (guide §2.3), the
+# rolling hash is one folded scalar expression instead of k interpreted
+# zip_with passes (guide §4.2), and doc_id reconstructs as 'doc'+c on
+# the bounded outputs.
 
 
 def _dup_spans_packed(pos: DataFrame, *, n: int, min_docs: int) -> DataFrame:

@@ -21,6 +21,11 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 VOCAB_SIZE = 50257  # GPT-2-style vocab; token values live in [0, VOCAB_SIZE)
+# fixture token generator (datagen): token i of canon doc c is
+# (c*K1 + i*K2) mod VOCAB_SIZE, and n_tok < MAX_TOK
+K1 = 2654435761  # Knuth multiplicative hash constants
+K2 = 2246822519
+MAX_TOK = 2048
 
 SEQUENCES = T.StructType(
     [

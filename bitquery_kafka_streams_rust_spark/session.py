@@ -75,7 +75,7 @@ def get_spark(
         # arrays, so the default 128 MB scan split yields multi-GB
         # per-task batches whose GC cost grows superlinearly (measured:
         # the decode stage ran 4x faster at 16 MB splits on the SAME
-        # cores — scripts/profile_checksum.py).  32 MB keeps per-task
+        # cores — measured for commit e73ddb2).  32 MB keeps per-task
         # memory bounded while staying coarse enough that a 100 TB table
         # is ~3M tasks; override per job with extra_conf.
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
@@ -93,7 +93,7 @@ def get_spark(
                 "true")
         # Spark 4.1 writes a checksum companion file for EVERY checkpoint
         # file; measured here it multiplied per-partition state-commit
-        # cost ~6x (scripts/profile_stream.py: 144s -> 22s at local[8],
+        # cost ~6x (commit b479168: 144s -> 22s at local[8],
         # 32 state partitions, RocksDB). Default to the pre-4.1 behavior;
         # flip on via env where checkpoint durability beats commit latency.
         .config(

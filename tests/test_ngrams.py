@@ -31,7 +31,7 @@ def _pairs(seq, n):
 def _vocab(seq):
     return (
         seq.select("tokens")
-        .mapInArrow(SKN.distinct_tokens_kernel(from_gen=False), "t int")
+        .mapInArrow(SKN.distinct_tokens_kernel(), "t int")
         .distinct()
         .count()
     )
@@ -40,7 +40,7 @@ def _vocab(seq):
 def _collocations(seq, **kw):
     uni = (
         seq.select("tokens")
-        .mapInArrow(SKN.token_counts_kernel(from_gen=False), "t int, cnt long")
+        .mapInArrow(SKN.token_counts_kernel(), "t int, cnt long")
         .groupBy("t")
         .agg(F.sum("cnt").alias("c_tok"))
         .select(F.col("t").alias("tok"), "c_tok")

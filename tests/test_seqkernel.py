@@ -7,6 +7,10 @@ docs, invalid tokens, duplicate aliases)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +19,7 @@ from bitquery_kafka_streams_rust_spark.functions import seqkernel as SKN
 from bitquery_kafka_streams_rust_spark.functions import tokens as TK
 from bitquery_kafka_streams_rust_spark.operators import dedup as DD
 from bitquery_kafka_streams_rust_spark.operators import ngrams as NG
+from bitquery_kafka_streams_rust_spark.schemas import K1, K2, VOCAB_SIZE
 
 
 def _rows(df, cols):
@@ -104,8 +109,8 @@ def test_gram_hash_kernels_match_token_gram_hashes(spark, sf_dir):
         .distinct()
     )
     fast = (
-        SKN.spine_scalars(spark, sf_dir).select("doc_id", "_c", "n_tok")
-        .mapInArrow(SKN.distinct_grams_kernel(n=8, from_gen=True), "g long")
+        datagen.spine_scalars(spark, sf_dir).select("doc_id", "_c", "n_tok")
+        .mapInArrow(SKN.distinct_grams_kernel(n=8), "g long")
         .distinct()
     )
     assert _rows(fast, ["g"]) == _rows(slow, ["g"])
@@ -123,8 +128,8 @@ def test_bloom_hits_kernel_matches_expression(spark, sf_dir):
         "doc_id",
         DD.bloom_hit_count(DD.token_gram_hashes("tokens", 8), words, 1 << 16, 4).alias("n_hits"),
     )
-    fast = SKN.spine_scalars(spark, sf_dir).select("doc_id", "_c", "n_tok").mapInArrow(
-        SKN.bloom_hits_kernel(words, 1 << 16, 4, n=8, from_gen=True),
+    fast = datagen.spine_scalars(spark, sf_dir).select("doc_id", "_c", "n_tok").mapInArrow(
+        SKN.bloom_hits_kernel(words, 1 << 16, 4, n=8),
         "doc_id string, n_hits int",
     )
     assert _rows(fast, ["doc_id", "n_hits"]) == _rows(slow, ["doc_id", "n_hits"])
@@ -134,7 +139,7 @@ def test_token_counts_kernel_matches_explode(spark, sf_dir):
     seq = datagen.sequences_view(spark, sf_dir)
     slow = seq.select(F.explode("tokens").alias("t")).groupBy("t").count()
     fast = (
-        SKN.spine_scalars(spark, sf_dir).select("_c", "n_tok")
+        datagen.spine_scalars(spark, sf_dir).select("_c", "n_tok")
         .mapInArrow(SKN.token_counts_kernel(), "t int, cnt long")
         .groupBy("t")
         .agg(F.sum("cnt").alias("count"))
@@ -154,7 +159,7 @@ def test_cdc_chunk_kernel_matches_chunk_table(spark, sf_dir):
     from bitquery_kafka_streams_rust_spark.operators import cdchunk as CC
 
     slow = CC.chunk_table(datagen.sequences_view(spark, sf_dir), w=8, boundary_bits=5)
-    fast = SKN.spine_scalars(spark, sf_dir).select("doc_id", "_c", "n_tok").mapInArrow(
+    fast = datagen.spine_scalars(spark, sf_dir).select("doc_id", "_c", "n_tok").mapInArrow(
         SKN.cdc_chunk_kernel(w=8, boundary_bits=5),
         "doc_id string, chunk_idx int, start int, chunk_len int, chunk_hash long",
     )
@@ -163,11 +168,13 @@ def test_cdc_chunk_kernel_matches_chunk_table(spark, sf_dir):
 
 
 def test_exploded_builders_match_kernels(spark, sf_dir):
-    """Codegen exploded builders over the generator spine == the kernel
-    emissions: packed grams and prefixes against the real-array kernels
-    over sequences_view (keyed by doc_id == 'doc'||c), gram and token
-    positions against their generator-fused kernels."""
-    spine = SKN.spine_scalars(spark, sf_dir)
+    """Codegen exploded builders over the generator spine == the
+    real-array forms over sequences_view, keyed by doc_id == 'doc'||c:
+    packed grams and prefixes against the packed kernels, gram positions
+    against spans.gram_positions, token positions against posexplode."""
+    from bitquery_kafka_streams_rust_spark.operators import spans as SP
+
+    spine = datagen.spine_scalars(spark, sf_dir)
     seq = datagen.sequences_view(spark, sf_dir).select("doc_id", "tokens")
     doc_id = F.concat(F.lit("doc"), F.col("c").cast("string")).alias("doc_id")
     fast_g = datagen.exploded_packed_grams(spine, 3).select(doc_id, "g")
@@ -181,16 +188,16 @@ def test_exploded_builders_match_kernels(spark, sf_dir):
     )
     cols = ["doc_id", "p", "next_tok"]
     assert _rows(fast_p, cols) == _rows(slow_p, cols)
-    fast_pos = datagen.exploded_gram_positions(spine, 8)
-    slow_pos = spine.select("_c", "n_tok").mapInArrow(
-        SKN.gram_positions_kernel(n=8), "c long, pos long, g long"
+    fast_pos = datagen.exploded_gram_positions(spine, 8).select(doc_id, "pos", "g")
+    slow_pos = SP.gram_positions(seq, n=8).select(F.col("id").alias("doc_id"), "pos", "g")
+    cols = ["doc_id", "pos", "g"]
+    assert _rows(fast_pos, cols) == _rows(slow_pos, cols)
+    fast_t = datagen.exploded_token_positions(spine).select(doc_id, "pos", "token")
+    slow_t = seq.select("doc_id", F.posexplode("tokens").alias("pos0", "token")).select(
+        "doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "token"
     )
-    assert _rows(fast_pos, ["c", "pos", "g"]) == _rows(slow_pos, ["c", "pos", "g"])
-    fast_t = datagen.exploded_token_positions(spine)
-    slow_t = spine.select("_c", "n_tok").mapInArrow(
-        SKN.token_positions_kernel(), "c long, pos long, token long"
-    )
-    assert _rows(fast_t, ["c", "pos", "token"]) == _rows(slow_t, ["c", "pos", "token"])
+    cols = ["doc_id", "pos", "token"]
+    assert _rows(fast_t, cols) == _rows(slow_t, cols)
 
 
 def test_adjacent_pair_counts_kernel(spark, sf_dir):
@@ -323,3 +330,205 @@ def test_cksum_from_tokens_kernel(spark, sf_dir):
         )
         assert _rows(fast, cols) == _rows(slow, cols)
         assert ("y", 2, 20) in _rows(fast, cols)
+
+
+# ---------------------------------------------------------------------------
+# kernel input: generated (spine_scalars) vs real tokens (sequences_view)
+# ---------------------------------------------------------------------------
+
+
+def _run(fn, batch):
+    return list(fn(iter([batch])))
+
+
+def _gen_batch(c, n_tok):
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=pa.int64()), pa.array(n_tok, type=pa.int32())],
+        names=["_c", "n_tok"],
+    )
+
+
+def test_token_generator_refuses_unsafe_canon_ids():
+    """The NumPy generator is exact only for 0 <= c <= GEN_C_MAX: beyond
+    it c*K1 + (n_tok-1)*K2 wraps int64, and a negative c floor-mods
+    where Catalyst keeps the sign — both raise instead of returning
+    different tokens."""
+    assert SKN.GEN_C_MAX == 3_474_699_811
+    for c in (-1, 3_474_699_812):
+        with pytest.raises(ValueError, match="3474699811"):
+            _run(SKN.token_counts_kernel(), _gen_batch([c], [3]))
+    # the bound itself still generates, exactly
+    (out,) = _run(SKN.token_counts_kernel(), _gen_batch([SKN.GEN_C_MAX], [2048]))
+    want = Counter((SKN.GEN_C_MAX * K1 + i * K2) % VOCAB_SIZE for i in range(2048))
+    got = dict(zip(out.column("t").to_pylist(), out.column("cnt").to_pylist()))
+    assert got == dict(want)
+
+
+def _eval_grams(spark, sf_dir):
+    """Sorted gram-hash set of a doc subset, from the real arrays."""
+    ev = datagen.sequences_view(spark, sf_dir).where(F.col("n_tok") % 5 == 0)
+    g = ev.select("tokens").mapInArrow(SKN.distinct_grams_kernel(n=8), "g long")
+    return np.unique(g.toArrow().column("g").to_numpy(zero_copy_only=False))
+
+
+_BOTH_INPUTS = {
+    "bloom_hits": (
+        lambda ev: SKN.bloom_hits_kernel(
+            _bloom_words(ev, 1 << 16, 4), 1 << 16, 4, n=8),
+        "doc_id string, n_hits int", None),
+    "shared_gram_count": (
+        lambda ev: SKN.shared_gram_count_kernel(ev, n=8),
+        "doc_id string, n_shared long", None),
+    "distinct_grams": (
+        lambda ev: SKN.distinct_grams_kernel(n=8), "g long", "distinct"),
+    "distinct_tokens": (
+        lambda ev: SKN.distinct_tokens_kernel(), "t int", "distinct"),
+    "token_counts": (
+        lambda ev: SKN.token_counts_kernel(), "t int, cnt long", "sum"),
+    "cdc_chunk": (
+        lambda ev: SKN.cdc_chunk_kernel(w=8, boundary_bits=5),
+        "doc_id string, chunk_idx int, start int, chunk_len int, chunk_hash long",
+        None),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_BOTH_INPUTS))
+def test_token_kernels_agree_on_both_inputs(spark, sf_dir, kernel):
+    """Each token kernel reads whichever input it is given: over the
+    scalar spine it generates the tokens, over sequences_view it decodes
+    the real arrays — same output either way."""
+    make, schema, combine = _BOTH_INPUTS[kernel]
+    fn = make(_eval_grams(spark, sf_dir))
+    gen = datagen.spine_scalars(spark, sf_dir).select("doc_id", "_c", "n_tok")
+    real = datagen.sequences_view(spark, sf_dir).select("doc_id", "tokens")
+    outs = []
+    for frame in (gen, real):
+        out = frame.mapInArrow(fn, schema)
+        if combine == "distinct":
+            out = out.distinct()
+        elif combine == "sum":
+            out = out.groupBy("t").agg(F.sum("cnt").alias("cnt"))
+        outs.append(_rows(out, out.columns))
+    assert outs[0] == outs[1]
+    assert len(outs[0]) > 0
+
+
+# ---------------------------------------------------------------------------
+# real-array kernels on arbitrary batch layouts, against per-row Python
+# ---------------------------------------------------------------------------
+
+
+def _py_grams(t, n=8, base=313, mod=SKN.P31):
+    """Distinct gram hashes of one row (token_gram_hashes convention:
+    rows shorter than n hash whole, empty/NULL rows have none)."""
+    if not t:
+        return set()
+    if len(t) < n:
+        h = 0
+        for x in t:
+            h = (h * base + x) % mod
+        return {h}
+    co = [pow(base, n - 1 - k, mod) for k in range(n)]
+    return {sum(t[i + k] * co[k] for k in range(n)) % mod for i in range(len(t) - n + 1)}
+
+
+def _bloom_probes(g, m_bits, k):
+    h1 = (g * K1) % SKN.P31
+    h2 = (g * 40503 + 7919) % SKN.P31
+    return [(h1 + i * h2) % m_bits for i in range(k)]
+
+
+def _bloom_words(grams, m_bits, k):
+    words = [0] * (m_bits // 32)
+    for g in grams:
+        for idx in _bloom_probes(int(g), m_bits, k):
+            words[idx // 32] |= 1 << (idx % 32)
+    return words
+
+
+def _layout_batches():
+    """Ragged real-token batches: a NULL row (also one whose slot spans
+    values), an empty row, a row shorter than 8, long rows, an array
+    sliced out of a larger one, and zero-row batches."""
+    rng = np.random.default_rng(7)
+
+    def toks(n):
+        return rng.integers(0, VOCAB_SIZE, n).tolist()
+
+    def batch(ids, tokens):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(ids, type=pa.string()), tokens], names=["doc_id", "tokens"]
+        )
+
+    lists = [None, [], toks(3), toks(20), toks(8), toks(12)]
+    plain = batch([f"d{i}" for i in range(len(lists))],
+                  pa.array(lists, type=pa.list_(pa.int32())))
+    big = pa.array([toks(9), None, toks(5), [], toks(30), toks(2)],
+                   type=pa.list_(pa.int32()))
+    sliced = batch(["s1", "s2", "s3", "s4"], big.slice(1, 4))
+    # NULL slot whose offsets still cover 4 values, first and last rows
+    vals = pa.array(toks(4 + 10 + 4 + 6), type=pa.int32())
+    spanning = batch(["n1", "n2", "n3", "n4"], pa.ListArray.from_arrays(
+        pa.array([0, 4, 14, 18, 24], type=pa.int32()), vals,
+        mask=pa.array([True, False, True, False])))
+    empty = batch([], pa.array([], type=pa.list_(pa.int32())))
+    return [plain, sliced, spanning, empty, plain.slice(2, 0)]
+
+
+@pytest.mark.parametrize("kernel", ["distinct_tokens", "token_counts",
+                                    "distinct_grams", "bloom_hits"])
+def test_real_array_kernels_any_layout(kernel):
+    m_bits, k = 1 << 12, 3
+    batches = _layout_batches()
+    all_grams = set()
+    for b in batches:
+        for t in b.column("tokens").to_pylist():
+            all_grams |= _py_grams(t)
+    # a filter holding half the grams: hits, misses and false positives
+    words = _bloom_words(sorted(all_grams)[::2], m_bits, k)
+    fn = {
+        "distinct_tokens": SKN.distinct_tokens_kernel(),
+        "token_counts": SKN.token_counts_kernel(),
+        "distinct_grams": SKN.distinct_grams_kernel(n=8),
+        "bloom_hits": SKN.bloom_hits_kernel(words, m_bits, k, n=8),
+    }[kernel]
+    for b in batches:
+        rows = b.column("tokens").to_pylist()
+        (out,) = _run(fn, b)
+        got = out.to_pydict()
+        if kernel == "distinct_tokens":
+            assert got["t"] == sorted({x for t in rows if t for x in t})
+        elif kernel == "token_counts":
+            want = Counter(x for t in rows if t for x in t)
+            assert dict(zip(got["t"], got["cnt"])) == dict(want)
+            assert len(got["t"]) == len(want)
+        elif kernel == "distinct_grams":
+            assert got["g"] == sorted(set().union(*map(_py_grams, rows)))
+        else:
+            bits = lambda idx: (words[idx // 32] >> (idx % 32)) & 1  # noqa: E731
+            want = [
+                sum(all(bits(i) for i in _bloom_probes(g, m_bits, k)) for g in _py_grams(t))
+                for t in rows
+            ]
+            assert got["doc_id"] == b.column("doc_id").to_pylist()
+            assert got["n_hits"] == want
+
+
+# ---------------------------------------------------------------------------
+# the replicated spine behind write_spine_batches
+# ---------------------------------------------------------------------------
+
+
+def test_spine_from_range_replicas(spark, sf_dir):
+    """Replica 0 of the range spine is sequences_view row for row (ids
+    0..499 at sf0.001), and replica 1's event time starts after replica
+    0's ends — the arrival order the per-replica day offset promises."""
+    spine = datagen._spine_from_range(spark, 500, 2, None)
+    rep = (F.substring("doc_id", 4, 18).cast("long") / 10_000_000).cast("int")
+    cols = ["doc_id", "tokens", "n_tok", "source", "ts"]
+    r0 = spine.where(rep == 0)
+    assert _rows(r0, cols) == _rows(datagen.sequences_view(spark, sf_dir), cols)
+    span = spine.groupBy(rep.alias("r")).agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
+    by = {r["r"]: r for r in span.collect()}
+    assert set(by) == {0, 1}
+    assert by[1]["lo"] > by[0]["hi"]
